@@ -18,6 +18,8 @@ final class HttpApi(engine: PromEngine, port: Int = 0,
                     gate: QueryGate = new QueryGate(100)) {
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  // non-daemon workers: stop() must shut them down or the JVM never exits
+  private val executor = java.util.concurrent.Executors.newFixedThreadPool(8)
 
   def boundPort: Int = server.getAddress.getPort
 
@@ -28,11 +30,14 @@ final class HttpApi(engine: PromEngine, port: Int = 0,
     server.createContext("/api/v1/labels", handler(labels))
     server.createContext("/api/v1/label/", handler(labelValues))
     server.createContext("/metrics", metricsHandler(_))
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+    server.setExecutor(executor)
     server.start()
     this
   }
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = {
+    server.stop(0)
+    executor.shutdown()
+  }
 
   // ------------------------------------------------------------ handlers
   /** Thanos' `max_source_resolution` request parameter: caps which
@@ -123,9 +128,7 @@ final class HttpApi(engine: PromEngine, port: Int = 0,
       p.time("start").getOrElse(Long.MinValue / 2), p.time("end").getOrElse(Long.MaxValue / 2))
     // limit applies to /labels too (ref api/http/query.go limit handling);
     // label-NAME cardinality is tiny, so the take here is already bounded
-    val limit = p.limit()
-    val truncated = limit > 0 && names.size > limit
-    val out = if (truncated) names.take(limit) else names
+    val (out, truncated) = graft.sources.SeriesStore.truncated(names, p.limit())
     envelopeRaw(s"[${out.map(jstr).mkString(",")}]",
       if (truncated) Seq("results truncated due to limit") else Seq.empty)
   }

@@ -2,8 +2,8 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.functions._
 import graft.promql._
+import graft.sources.{FrameStore, SeriesStore}
 
 object PromEngine {
   /** A native-histogram sample at the serving boundary — the engine-side
@@ -30,36 +30,12 @@ object PromEngine {
     * evaluation holds the whole result grid at once, so the result IS the
     * peak). */
   final case class EngineStats(samplesTotal: Long, peakSamples: Long)
-
-  /** Dictionary-style label introspection a source may provide: answers at
-    * chunk/row-group granularity (series with data NEAR the interval — the
-    * same contract as the reference's dictionary-resolved label_values,
-    * `search/search.go:173-201`, and the parquet-footer shortcut). When
-    * present, `/labels` and `/label/:name/values` serve from it with ZERO
-    * sample decode — an open raw-TSDB bucket answers off its cached refs. */
-  trait LabelIntrospection {
-    /** `limit > 0` ⇒ return AT MOST limit+1 entries in canonical sorted
-      * order (one extra so the caller can flag truncation), with the bound
-      * pushed into the source — an implementation must never materialize
-      * the full distinct set just to truncate it afterwards (the reference
-      * truncates during materialization, `search/materialize.go:53-58`).
-      * Canonical series order = element-wise comparison of the sorted
-      * (name, value) pairs, never a concatenated string (collides). */
-    def labelValues(label: String, matchers: Seq[LabelMatcher],
-                    mintMs: Long, maxtMs: Long, limit: Int = 0): Seq[String]
-    def labelNames(matchers: Seq[LabelMatcher],
-                   mintMs: Long, maxtMs: Long, limit: Int = 0): Seq[String]
-    /** Distinct label sets matching the union of matcher sets — the
-      * `/api/v1/series` answer, same zero-decode contract. */
-    def series(matchSets: Seq[Seq[LabelMatcher]],
-               mintMs: Long, maxtMs: Long, limit: Int = 0): Seq[Map[String, String]]
-  }
 }
 
 /** Query-engine facade: PromQL string → evaluated result rows (the driver-side
   * collect boundary — same place the reference serializes its SeriesSets,
   * `api/http/query.go:536-564`). */
-final class PromEngine(samples: DataFrame,
+final class PromEngine(store: SeriesStore,
                        lookbackMs: Long = Eval.DefaultLookbackMs,
                        quotas: graft.limits.Quotas = graft.limits.Quotas(),
                        /** Downsample layers by resolution ms — when present,
@@ -72,52 +48,18 @@ final class PromEngine(samples: DataFrame,
                        /** Native-histogram downsample layers ([[graft.etl
                          * .Downsample.histLayer]]): aligned histogram
                          * rate/increase/delta serve from these. */
-                       histLayers: Map[Long, DataFrame] = Map.empty,
-                       /** Range-aware source: when present, each query binds
-                         * `sourceByRange(lo, hi)` with the AST-derived reach
-                         * ([[Compiler.timeBounds]]) instead of the fixed
-                         * `samples` frame — a day-listed store (the
-                         * reference-bucket reader) then opens only the days
-                         * the query can touch, the per-query Block mint/maxt
-                         * pruning of `db/db.go:252-258`. `samples` stays the
-                         * schema/metadata authority. */
-                       sourceByRange: Option[(Long, Long) => DataFrame] = None,
-                       /** Matcher-aware range source: like [[sourceByRange]]
-                         * but additionally handed the query's selector
-                         * matcher SETS ([[Compiler.selectorMatcherSets]] —
-                         * OR of per-selector ANDs is the sound prune), so a
-                         * raw-block source drops non-matching series before
-                         * any chunk I/O, the `PostingsForMatchers` shape.
-                         * Preferred over [[sourceByRange]] when both are
-                         * set. */
-                       sourceByRangeMatching:
-                         Option[(Long, Long, Seq[Seq[LabelMatcher]]) => DataFrame] = None,
-                       /** When present, label endpoints answer from it with
-                         * zero sample decode; see
-                         * [[PromEngine.LabelIntrospection]]. */
-                       labelIntrospection:
-                         Option[PromEngine.LabelIntrospection] = None) {
+                       histLayers: Map[Long, DataFrame] = Map.empty) {
   import PromEngine._
 
-  private def run(df: DataFrame): Seq[Series] = seriesOf(collectRows(df), df)
+  // Frame-backed call shapes of the gateway benchmark (perfbench/), which
+  // compiles against these sources; code here uses the primary constructor.
+  def this(samples: DataFrame, lookbackMs: Long) =
+    this(new FrameStore(samples), lookbackMs)
 
-  private def boundSamples(ast: graft.promql.Ast.Expr,
-                           startMs: Long, endMs: Long): DataFrame =
-    sourceByRangeMatching match {
-      case Some(f) =>
-        val (lo, hi) = Compiler.timeBounds(ast, startMs, endMs, lookbackMs)
-        f(lo, hi, Compiler.selectorMatcherSets(ast))
-      case None =>
-        sourceByRange.fold(samples) { f =>
-          val (lo, hi) = Compiler.timeBounds(ast, startMs, endMs, lookbackMs)
-          f(lo, hi)
-        }
-    }
-
-  private def rangedSamples(mintMs: Long, maxtMs: Long,
-                            sets: Seq[Seq[LabelMatcher]] = Seq.empty): DataFrame =
-    sourceByRangeMatching.map(_(mintMs, maxtMs, sets))
-      .getOrElse(sourceByRange.fold(samples)(_(mintMs, maxtMs)))
+  def this(samples: DataFrame, lookbackMs: Long, quotas: graft.limits.Quotas,
+           layers: Map[Long, DataFrame], histLayers: Map[Long, DataFrame],
+           sourceByRange: Option[(Long, Long) => DataFrame]) =
+    this(new FrameStore(samples, sourceByRange), lookbackMs, quotas, layers, histLayers)
 
   private def collectRows(df: DataFrame): Seq[Row] =
     quotas.collect(df).toSeq // pre-flight + mid-scan byte charge
@@ -185,42 +127,33 @@ final class PromEngine(samples: DataFrame,
   def rangeQuery(promql: String, startMs: Long, endMs: Long, stepMs: Long): Seq[Series] =
     rangeQueryWithStats(promql, startMs, endMs, stepMs)._1
 
-  /** Layers admissible under a per-query resolution cap — Thanos'
-    * `max_source_resolution` request parameter (0 ⇒ raw data only). */
-  private def cappedLayers(maxSourceResMs: Long): Map[Long, DataFrame] =
-    layers.filter { case (res, _) => res <= maxSourceResMs }
-
-  private def cappedHistLayers(maxSourceResMs: Long): Map[Long, DataFrame] =
-    histLayers.filter { case (res, _) => res <= maxSourceResMs }
-
   /** Instant query + per-query stats + static analyzer warnings (the
     * annotation channel the reference streams before results,
-    * `api/grpc/thanos.go:270-276`). */
+    * `api/grpc/thanos.go:270-276`). `maxSourceResMs` caps which downsample
+    * layers may serve — Thanos' `max_source_resolution` (0 ⇒ raw only). */
   def instantQueryWithStats(promql: String, tMs: Long,
                             maxSourceResMs: Long = Long.MaxValue)
-      : (Seq[Series], EngineStats, Seq[String]) = {
-    val ast = Parser.parse(promql)
-    val ctx = Compiler.Ctx(boundSamples(ast, tMs, tMs), tMs, tMs,
-      stepMs = 1000L, lookbackMs,
-      layers = cappedLayers(maxSourceResMs),
-      histLayers = cappedHistLayers(maxSourceResMs))
-    val (df, mixed) = Compiler.compileServingAnnotated(ast, ctx)
-    // materialize the (tiny, usually empty) mixed-keys frame ONCE into the
-    // block cache: the warning probe below warms it and the result plan's
-    // anti-joins reuse it instead of re-evaluating both typed subtrees
-    mixed.foreach(_.persist())
-    try finish(df, Compiler.staticWarnings(ast) ++ mixedWarning(mixed))
-    finally mixed.foreach(_.unpersist(false))
-  }
+      : (Seq[Series], EngineStats, Seq[String]) =
+    evaluate(promql, tMs, tMs, 1000L, maxSourceResMs)
 
   def rangeQueryWithStats(promql: String, startMs: Long, endMs: Long, stepMs: Long,
                           maxSourceResMs: Long = Long.MaxValue)
-      : (Seq[Series], EngineStats, Seq[String]) = {
+      : (Seq[Series], EngineStats, Seq[String]) =
+    evaluate(promql, startMs, endMs, stepMs, maxSourceResMs)
+
+  /** Each query selects only its AST-derived reach ([[Compiler.timeBounds]])
+    * and selector matcher sets ([[Compiler.selectorMatcherSets]] — OR of
+    * per-selector ANDs is the sound prune) from the store: the per-query
+    * Block mint/maxt pruning of `db/db.go:252-258`, and on a raw-block store
+    * the `PostingsForMatchers` shape. */
+  private def evaluate(promql: String, startMs: Long, endMs: Long, stepMs: Long,
+                       maxSourceResMs: Long): (Seq[Series], EngineStats, Seq[String]) = {
     val ast = Parser.parse(promql)
-    val ctx = Compiler.Ctx(boundSamples(ast, startMs, endMs), startMs, endMs,
-      stepMs, lookbackMs,
-      layers = cappedLayers(maxSourceResMs),
-      histLayers = cappedHistLayers(maxSourceResMs))
+    val (lo, hi) = Compiler.timeBounds(ast, startMs, endMs, lookbackMs)
+    val ctx = Compiler.Ctx(store.select(lo, hi, Compiler.selectorMatcherSets(ast)),
+      startMs, endMs, stepMs, lookbackMs,
+      layers = layers.filter(_._1 <= maxSourceResMs),
+      histLayers = histLayers.filter(_._1 <= maxSourceResMs))
     val (df, mixed) = Compiler.compileServingAnnotated(ast, ctx)
     // materialize the (tiny, usually empty) mixed-keys frame ONCE into the
     // block cache: the warning probe below warms it and the result plan's
@@ -248,102 +181,18 @@ final class PromEngine(samples: DataFrame,
   /** `/api/v1/series`: union of matcher sets (match[] = OR, ref
     * `api/http/query.go:627-633`), dedup across sets. */
   def series(matchSets: Seq[Seq[LabelMatcher]], mintMs: Long, maxtMs: Long,
-             limit: Int = 0): (Seq[Map[String, String]], Boolean) = {
-    labelIntrospection.foreach { li =>
-      // limit is PUSHED to the source: the introspection contract returns
-      // ≤ limit+1 canonically-sorted entries, never the full distinct set
-      val got = li.series(matchSets, mintMs, maxtMs, limit)
-      val truncated = limit > 0 && got.size > limit
-      return (if (truncated) got.take(limit) else got, truncated)
-    }
-    val lbls = labelColumns
-    // canonical order = element-wise comparison of the sorted (name, value)
-    // pairs — the SAME key the introspection backends sort by, so a limited
-    // /series returns the same subset regardless of which backend answers.
-    // (Ordering by the raw label columns nulls-first disagrees with pair
-    // order for absent labels; a concatenated string key collides.)
-    val kvKey = filter(
-      array(lbls.sorted.map(l =>
-        struct(lit(l).as("key"), col(l).as("value"))): _*),
-      e => e.getField("value").isNotNull)
-    val selected = Eval.selectUnion(rangedSamples(mintMs, maxtMs, matchSets), matchSets, mintMs, maxtMs)
-      .select(lbls.map(col): _*)
-      .distinct().withColumn("__graft_kv", kvKey).orderBy(col("__graft_kv"))
-    val rows = (if (limit > 0) selected.limit(limit + 1) else selected).collect().toSeq
-    val truncated = limit > 0 && rows.size > limit
-    val out = (if (truncated) rows.take(limit) else rows).map(rowToLabels(lbls, _))
-    (out, truncated)
-  }
+             limit: Int = 0): (Seq[Map[String, String]], Boolean) =
+    SeriesStore.truncated(store.series(matchSets, mintMs, maxtMs, limit), limit)
 
-  /** Columns per `labelNames` fallback aggregate — large enough that any
-    * realistic schema fits in one pass, small enough that Janino compiles
-    * each batch without interpreted fallback. */
-  private val LabelNamesAggBatch = 1024
-
-  /** Label columns of the wide samples schema: the STRING columns minus
-    * the sample/meta payload — a native-histogram column (h, struct) is a
-    * sample value and must not surface as a label name/value. */
-  private def labelColumns: Seq[String] = samples.schema.fields.iterator
-    .filter(_.dataType == org.apache.spark.sql.types.StringType)
-    .map(_.name)
-    .filterNot(Set("ts_ms", "value", "sample_id", "series_hash", "date")).toSeq
-
-  def labelNames(matchers: Seq[LabelMatcher], mintMs: Long, maxtMs: Long): Seq[String] = {
-    labelIntrospection.foreach { li =>
-      return li.labelNames(matchers, mintMs, maxtMs).sorted
-    }
-    val lbls = labelColumns
-    // footer fast path first (matcherless only): per-row-group statistics
-    // prove which labels actually carry values INSIDE the interval (the
-    // reference reads per-block schemas within range, search/search.go:294).
-    // Non-file-backed views (decode-on-read stores, bounded bucket frames)
-    // fall through to the count scan — the answer must stay DATA-driven: a
-    // label column existing in the schema is not a label present in range.
-    val viaFooter =
-      if (matchers.isEmpty)
-        graft.sources.FooterLabelValues.labelNames(
-          rangedSamples(mintMs, maxtMs), lbls, mintMs, maxtMs)
-      else None
-    viaFooter.getOrElse {
-      val m = Eval.select(rangedSamples(mintMs, maxtMs, Seq(matchers)), matchers, mintMs, maxtMs)
-      // BATCHED count aggregate: a single aggregate over every label column
-      // is a codegen stress at the reference's own ≤32k-column schema cap
-      // (method-split churn, then interpreted fallback). Each batch's scan
-      // reads only its column slice (columnar pruning), so total I/O over
-      // all batches matches the one wide pass; job overhead is ~32 cheap
-      // aggregates at the ceiling, zero extra at typical (<1k) widths.
-      lbls.grouped(LabelNamesAggBatch).flatMap { batch =>
-        val counts = m.agg(count(col(batch.head)).as(batch.head),
-          batch.tail.map(l => count(col(l)).as(l)): _*).collect()(0)
-        batch.filter(l => counts.getAs[Long](l) > 0)
-      }.toSeq.sorted
-    }
-  }
+  def labelNames(matchers: Seq[LabelMatcher], mintMs: Long, maxtMs: Long): Seq[String] =
+    store.labelNames(setOf(matchers), mintMs, maxtMs).sorted
 
   def labelValues(label: String, matchers: Seq[LabelMatcher], mintMs: Long,
-                  maxtMs: Long, limit: Int = 0): (Seq[String], Boolean) = {
-    if (!labelColumns.contains(label)) return (Seq.empty, false)
-    labelIntrospection.foreach { li =>
-      val vals = li.labelValues(label, matchers, mintMs, maxtMs, limit)
-      val truncated = limit > 0 && vals.size > limit
-      return (if (truncated) vals.take(limit) else vals, truncated)
-    }
-    // no-matcher shortcut (ref search/search.go:173-201): resolve from the
-    // parquet dictionary pages + footer stats, scanning only the interval's
-    // boundary files — exact, falls back to the scan when inapplicable
-    if (matchers.isEmpty)
-      graft.sources.FooterLabelValues.labelValues(rangedSamples(mintMs, maxtMs), label, mintMs, maxtMs)
-        .foreach { vals =>
-          val truncated = limit > 0 && vals.size > limit
-          return (if (truncated) vals.take(limit) else vals, truncated)
-        }
-    val vals = Eval.select(rangedSamples(mintMs, maxtMs, Seq(matchers)), matchers, mintMs, maxtMs)
-      .select(col(label)).na.drop().distinct().orderBy(col(label))
-    val rows = (if (limit > 0) vals.limit(limit + 1) else vals).collect().toSeq
-    val truncated = limit > 0 && rows.size > limit
-    ((if (truncated) rows.take(limit) else rows).map(_.getString(0)), truncated)
-  }
+                  maxtMs: Long, limit: Int = 0): (Seq[String], Boolean) =
+    if (!store.labelColumns.contains(label)) (Seq.empty, false)
+    else SeriesStore.truncated(
+      store.labelValues(label, setOf(matchers), mintMs, maxtMs, limit), limit)
 
-  private def rowToLabels(lbls: Seq[String], r: Row): Map[String, String] =
-    lbls.flatMap(l => Option(r.getAs[Any](l)).map(v => l -> v.toString)).toMap
+  private def setOf(matchers: Seq[LabelMatcher]): Seq[Seq[LabelMatcher]] =
+    if (matchers.isEmpty) Nil else Seq(matchers)
 }

@@ -105,7 +105,7 @@ final class StoreApi(samples: DataFrame,
     val lookback =
       if (lookbackDeltaSeconds > 0) lookbackDeltaSeconds * 1000L
       else graft.promql.Eval.DefaultLookbackMs
-    new PromEngine(base(replicaLabels), lookback, quotas)
+    new PromEngine(new graft.sources.FrameStore(base(replicaLabels)), lookback, quotas)
   }
 
   /** querypb.Query/Query: PromQL instant query over gRPC (ref

@@ -525,23 +525,6 @@ object TsdbBlock {
     }
   }
 
-  /** All label names in the block, off the label offset table ALONE — no
-    * label-index section, no symbols, no series entry. */
-  def readLabelNamesAt(ix: IndexReadAt): Seq[String] = {
-    val toc = tocOffsetsAt(ix)
-    val lot = sectionAt(ix, toc(3), "label offset table")
-    val n = be32(lot, 0)
-    val c = new Cursor(lot, 4)
-    (0 until n).map { _ =>
-      val nk = c.uvarint().toInt
-      require(nk == 1, s"label offset table entry with $nk keys (want 1)")
-      val nl = c.uvarint().toInt
-      val nm = new String(lot, c.pos, nl, "UTF-8"); c.pos += nl
-      c.uvarint() // section offset, unused here
-      nm
-    }
-  }
-
   /** Decode ONLY the series entries with the given ids (id = entry offset /
     * 16 — the postings address space), 16-byte-aligned direct seeks instead
     * of a full section walk, streamed lazily. Pair with [[readPostings]]

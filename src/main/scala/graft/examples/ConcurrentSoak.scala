@@ -258,7 +258,7 @@ object ConcurrentSoak {
         // /series must collect ≤ limit+1 label sets however many series the
         // bucket holds, and none of these may re-parse an index
         "open_labels" -> (() => {
-          val names = bucket.labelNamesIn()
+          val names = bucket.labelNames()
           require(names == Seq("__name__", "uid"), s"labels: $names"); ()
         }),
         "open_label_values" -> (() => {
@@ -266,7 +266,7 @@ object ConcurrentSoak {
           require(vals.size == 5 && vals.head == "mig_m0", s"values: $vals"); ()
         }),
         "open_series_limited" -> (() => {
-          val got = bucket.seriesIn(limit = 64)
+          val got = bucket.series(limit = 64)
           require(got.size == 65, s"series limit leaked: ${got.size}"); ()
         }))
       openMix.foreach { case (_, fn) => fn() } // warmup, as for phase 1

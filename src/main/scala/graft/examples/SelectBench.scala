@@ -295,9 +295,9 @@ object SelectBench {
       import graft.etl.Downsample
       val (raw, layer, _) = dStore
       val day = 86400000L
-      val eng = new graft.api.PromEngine(raw,
+      val eng = new graft.api.PromEngine(new graft.sources.FrameStore(raw),
         layers = Map(Downsample.Res1h -> layer))
-      val plain = new graft.api.PromEngine(raw)
+      val plain = new graft.api.PromEngine(new graft.sources.FrameStore(raw))
       val q = "increase(ctr[20d])"
       // instant query misaligned by 13m7s past day 20
       val (s0, st) = (20 * day + 13 * 60000L + 7000L, 60000L)

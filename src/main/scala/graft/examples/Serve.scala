@@ -1,13 +1,11 @@
 package graft.examples
 
-import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import graft.api.{HttpApi, PromEngine}
-import graft.model.TimeSeriesModel
-import graft.sources.Tables
 
 /** The `serve` command analog (ref cmd/serve.go): Prometheus-compatible HTTP
-  * API over the events fixture.
+  * API over a store directory in any serving layout
+  * ([[graft.sources.SeriesStore.open]]).
   * `runMain graft.examples.Serve [port] [sfDir] [lookbackMs]`
   *
   * Quota env knobs, the `--select.*-quota` flag analogs (cmd/serve.go:106-110,
@@ -36,79 +34,12 @@ object Serve {
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations ++ graft.plans.GraftRules.all
     spark.sparkContext.setLogLevel("WARN")
-    // accept a raw fixture dir, a converted flat layout (<dir>/samples), or
-    // the chunk-file layout (<dir>/chunks — decode-on-read; ChunkFramePrune
-    // keeps per-query time bounds pruning frames at the scan)
-    def isDir(p: String) = java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p))
-    // a thanos-parquet-gateway bucket (<hash>/<date>/<shard>.labels.parquet)
-    // serves directly through the byte-level interop reader — no conversion
-    def tsdbUlids(p: String): Seq[String] =
-      if (!isDir(p)) Nil
-      else {
-        val s = java.nio.file.Files.list(java.nio.file.Paths.get(p))
-        try s.iterator().asScala.filter(d =>
-          java.nio.file.Files.isRegularFile(d.resolve("index")) &&
-            java.nio.file.Files.isRegularFile(d.resolve("meta.json")))
-          .map(_.getFileName.toString).toSeq.sorted
-        finally s.close()
-      }
-    def isReferenceBucket(p: String): Boolean = isDir(p) && {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p), 3)
-      try s.iterator().asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-        .asScala.exists(_.getFileName.toString.endsWith(".labels.parquet"))
-      finally s.close()
-    }
-    type ByMatching = (Long, Long, Seq[Seq[graft.promql.LabelMatcher]]) => DataFrame
-    var byMatching: Option[ByMatching] = None
-    var labelIntro: Option[PromEngine.LabelIntrospection] = None
-    val (samples, byRange: Option[(Long, Long) => DataFrame]) =
-      if (isDir(s"$sfDir/chunks"))
-        (graft.etl.Ingest.openChunkedSamples(spark, sfDir), None)
-      else if (isDir(s"$sfDir/samples"))
-        (graft.etl.Ingest.openSamples(spark, sfDir), None)
-      else if (isReferenceBucket(sfDir)) {
-        println(s"serving a reference-layout bucket: $sfDir")
-        // store-invariant metadata (merged labels schema, stream.pb) is
-        // computed ONCE and closed over; each query then lists only the day
-        // directories its AST-derived reach can touch (the per-query Block
-        // mint/maxt pruning, db/db.go:252-258)
-        val meta = graft.etl.ReferenceFormat.bucketMeta(spark, sfDir)
-        (graft.etl.ReferenceFormat.selectReferenceStore(spark, sfDir, meta = Some(meta)),
-          Some((lo: Long, hi: Long) => graft.etl.ReferenceFormat
-            .selectReferenceStore(spark, sfDir, Nil, lo, hi, meta = Some(meta))))
-      }
-      else if (tsdbUlids(sfDir).nonEmpty) {
-        // a RAW Prometheus/Thanos TSDB bucket (<ulid>/{meta.json,index,
-        // chunks/}) serves directly through the distributed block reader —
-        // "query it before the convert loop gets to it": per-query block
-        // mint/maxt pruning via meta.json, chunk-granular pruning inside
-        val ulids = tsdbUlids(sfDir)
-        println(s"serving a RAW TSDB bucket: $sfDir (${ulids.size} blocks)")
-        // the open bucket pins a persisted refs dataset for the server's
-        // life (correct for serving); release it on shutdown so embedding
-        // callers that run Serve.main in-JVM don't leak the cache
-        val bucket = graft.sources.TsdbBlockReader.openBucket(spark, sfDir, ulids)
-        Runtime.getRuntime.addShutdownHook(new Thread(() => bucket.close()))
-        // matcher-aware source: each query's selector sets prune the cached
-        // refs before any chunk I/O (the serving PostingsForMatchers shape);
-        // label endpoints answer from the refs alone (dictionary contract)
-        byMatching = Some((lo, hi, sets) => bucket.select(lo, hi, sets))
-        labelIntro = Some(new PromEngine.LabelIntrospection {
-          def labelValues(label: String, ms: Seq[graft.promql.LabelMatcher],
-                          lo: Long, hi: Long, limit: Int): Seq[String] =
-            bucket.labelValues(label, lo, hi,
-              if (ms.isEmpty) Seq.empty else Seq(ms), limit)
-          def labelNames(ms: Seq[graft.promql.LabelMatcher],
-                         lo: Long, hi: Long, limit: Int): Seq[String] =
-            bucket.labelNamesIn(lo, hi,
-              if (ms.isEmpty) Seq.empty else Seq(ms), limit)
-          def series(sets: Seq[Seq[graft.promql.LabelMatcher]],
-                     lo: Long, hi: Long, limit: Int): Seq[Map[String, String]] =
-            bucket.seriesIn(lo, hi, sets, limit)
-        })
-        (bucket.select(), Some((lo: Long, hi: Long) => bucket.select(lo, hi)))
-      }
-      else (TimeSeriesModel.samples(Tables(spark, sfDir).events), None)
+    // any serving layout — chunked, flat, reference bucket, raw TSDB blocks
+    // or the raw fixture; see SeriesStore.open for the precedence. An open
+    // raw-TSDB bucket pins a persisted refs dataset for the server's life;
+    // release it on shutdown so in-JVM embedders don't leak the cache
+    val store = graft.sources.SeriesStore.open(spark, sfDir)
+    Runtime.getRuntime.addShutdownHook(new Thread(() => store.close()))
     // Thanos auto-downsampling: persisted downsample-<res> layers serve
     // aligned long-range queries transparently (graft.promql.LayerRoute)
     val layers = graft.etl.Downsample.discoverLayers(spark, sfDir)
@@ -118,8 +49,7 @@ object Serve {
     if (histLayers.nonEmpty)
       println(s"histogram layers: ${histLayers.keys.toSeq.sorted.mkString(", ")} ms")
     val api = new HttpApi(
-      new PromEngine(samples, lookback, quotas, layers, histLayers, byRange,
-        byMatching, labelIntro),
+      new PromEngine(store, lookback, quotas, layers, histLayers),
       port).start()
     println(s"SERVING on http://127.0.0.1:${api.boundPort}/api/v1/query")
     Thread.currentThread().join() // serve until killed

@@ -140,13 +140,13 @@ object TsdbReadBench {
     // the bucket holds (top-K plan, never a full driver materialization)
     val seriesLimited = (1 to math.max(2, repeat)).map { _ =>
       val t0 = System.nanoTime()
-      val got = bucket.seriesIn(limit = 1000)
+      val got = bucket.series(limit = 1000)
       require(got.size == 1001, s"series limit leaked: ${got.size}")
       (System.nanoTime() - t0) / 1e9
     }.min
     val labelsSec = (1 to math.max(2, repeat)).map { _ =>
       val t0 = System.nanoTime()
-      val names = bucket.labelNamesIn()
+      val names = bucket.labelNames()
       require(names == Seq("__name__", "uid"), s"labels: $names")
       (System.nanoTime() - t0) / 1e9
     }.min

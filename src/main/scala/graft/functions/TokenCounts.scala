@@ -71,7 +71,8 @@ object CountInSet {
 }
 
 /** Count of array elements containing at least one ASCII letter — exactly
-  * `size(filter(arr, x -> x rlike '[A-Za-z]'))`: the regex finds any char in
+  * `size(filter(arr, x -> x rlike '[A-Za-z]'))`, where a null element never
+  * matches: the regex finds any char in
   * the class anywhere in the token; in UTF-8 an A–Z/a–z byte value occurs
   * only as that standalone ASCII char (continuation bytes are ≥ 0x80), so a
   * byte scan decides it without decoding. */
@@ -131,21 +132,24 @@ object CountAlphaChars {
 }
 
 object CountAlphaTokens {
-  /** Static entry point shared by eval and generated code. */
+  /** Static entry point shared by eval and generated code. A null element
+    * counts as no match, like `null rlike …` inside filter(). */
   def compute(toks: ArrayData): Int = {
     val sz = toks.numElements()
     var n = 0
     var i = 0
     while (i < sz) {
-      val b = toks.getUTF8String(i).getBytes
-      var j = 0
-      var hit = false
-      while (!hit && j < b.length) {
-        val c = b(j)
-        hit = (c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z')
-        j += 1
+      if (!toks.isNullAt(i)) {
+        val b = toks.getUTF8String(i).getBytes
+        var j = 0
+        var hit = false
+        while (!hit && j < b.length) {
+          val c = b(j)
+          hit = (c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z')
+          j += 1
+        }
+        if (hit) n += 1
       }
-      if (hit) n += 1
       i += 1
     }
     n

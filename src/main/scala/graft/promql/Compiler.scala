@@ -117,8 +117,8 @@ object Compiler {
     * the grid `[startMs, endMs]` — the widest selector reach across the AST:
     * per selector, the `@`-pinned (or grid) instant minus offset minus its
     * range (or the lookback for instant selectors); subqueries recurse with
-    * their own shifted interval. Used to bound a range-aware samples source
-    * ([[graft.api.PromEngine]]'s `sourceByRange`): day-partitioned or
+    * their own shifted interval. Bounds each query's store select in
+    * [[graft.api.PromEngine]]: day-partitioned or
     * reference-bucket stores then list only the days a query can read —
     * the Block mint/maxt pruning the reference applies per query
     * (`db/db.go:252-258`). Negative offsets widen forward naturally. */
@@ -815,67 +815,26 @@ object Compiler {
 
     case "histogram_quantile" if hasHist(ctx) && isHistArg(args(1)) =>
       val phi = scalarOf(args.head)
-      val v = histSelector(args(1), ctx, fn)
-      dropName(v.withColumn("value",
-          NativeHistograms.quantile(lit(phi), col("__graft_h")))
-        .drop("__graft_h"))
+      val native = dropName(histSelector(args(1), ctx, fn).withColumn("value",
+          NativeHistograms.quantile(lit(phi), col("__graft_h"))))
+      // Prometheus takes each sample by type: native histograms walk their
+      // buckets, float samples carrying `le` take the classic path — a store
+      // with an `h` column may hold classic bucket series as well. Only an
+      // argument whose float vector keeps `le` can have a classic side.
+      val floats =
+        if (!ctx.samples.columns.contains("le")) None
+        else Some(compile(args(1), ctx.copy(
+          samples = ctx.samples.filter(col("h").getField("cnt").isNull),
+          fullSamples = Some(ctx.fullSamples.getOrElse(ctx.samples)))))
+          .filter(_.columns.contains("le"))
+      floats match {
+        case None => native.drop("__graft_h")
+        case Some(v) => native.filter(col("__graft_h").isNotNull).drop("__graft_h")
+          .unionByName(classicQuantile(phi, v), allowMissingColumns = true)
+      }
 
     case "histogram_quantile" => // over a vector carrying an `le` label
-      // Prometheus bucketQuantile (promql/quantile.go): φ checked before
-      // bucket validity; missing +Inf bucket, <2 buckets, or an empty
-      // histogram → NaN; non-monotone cumulative counts (scrape races) are
-      // repaired by a running max; rank in the +Inf bucket returns the last
-      // finite bound; first-bucket ranks interpolate from an implicit 0
-      // lower bound unless that bound is ≤ 0. One groupBy per histogram
-      // series, then pure HOF expressions — no second shuffle.
-      val phi = scalarOf(args.head)
-      val v0 = compile(args(1), ctx)
-      if (!v0.columns.contains("le"))
-        throw new ParseException("histogram_quantile needs an 'le' label")
-      val v = dropName(v0) // result series carry no metric name
-      val grp = ("step_ms" +: labelCols(v).filterNot(_ == "le")).map(col)
-      // Prometheus le labels are strings; "+Inf" isn't castable directly
-      val leD = when(col("le").isin("+Inf", "Inf", "inf"),
-        lit(Double.PositiveInfinity)).otherwise(col("le").cast("double"))
-      val agged = v.groupBy(grp: _*)
-        .agg(sort_array(collect_list(struct(leD.as("le"),
-          col("value").cast("double").as("c")))).as("__graft_bkts"))
-      if (phi.isNaN || phi < 0.0 || phi > 1.0) {
-        val out = if (phi.isNaN) Double.NaN
-          else if (phi < 0.0) Double.NegativeInfinity else Double.PositiveInfinity
-        agged.select((grp :+ lit(out).as("value")): _*)
-      } else {
-        val zero = "CAST(0.0 AS DOUBLE)"
-        val lo = s"IF(__graft_b = 1, $zero, element_at(__graft_bkts, __graft_b - 1).le)"
-        val loCum = s"IF(__graft_b = 1, $zero, element_at(__graft_cums, __graft_b - 1))"
-        agged
-          .withColumn("__graft_cums", expr( // running-max repaired cumulatives
-            s"""aggregate(__graft_bkts, CAST(array() AS ARRAY<DOUBLE>),
-               |  (acc, x) -> concat(acc, array(greatest(x.c,
-               |    IF(size(acc) = 0, $zero, element_at(acc, -1))))))""".stripMargin))
-          .withColumn("__graft_total", expr("element_at(__graft_cums, -1)"))
-          .withColumn("__graft_rank", col("__graft_total") * lit(phi))
-          .withColumn("__graft_b", expr( // first bucket whose cum ≥ rank
-            """aggregate(sequence(1, size(__graft_bkts)), size(__graft_bkts),
-              |  (acc, i) -> IF(element_at(__graft_cums, i) >= __graft_rank AND i < acc, i, acc))""".stripMargin))
-          .withColumn("value", expr(
-            s"""CASE
-               |  WHEN size(__graft_bkts) < 2 THEN CAST('NaN' AS DOUBLE)
-               |  WHEN element_at(__graft_bkts, -1).le != CAST('Infinity' AS DOUBLE)
-               |    THEN CAST('NaN' AS DOUBLE)
-               |  WHEN __graft_total <= 0 THEN CAST('NaN' AS DOUBLE)
-               |  WHEN __graft_b = size(__graft_bkts)
-               |    THEN element_at(__graft_bkts, size(__graft_bkts) - 1).le
-               |  WHEN __graft_b = 1 AND element_at(__graft_bkts, 1).le <= 0
-               |    THEN element_at(__graft_bkts, 1).le
-               |  ELSE $lo + (element_at(__graft_bkts, __graft_b).le - $lo) *
-               |    IF(element_at(__graft_cums, __graft_b) - $loCum = 0,
-               |       CAST('NaN' AS DOUBLE), -- 0/0 in Go: empty selected bucket
-               |       (__graft_rank - $loCum) /
-               |         (element_at(__graft_cums, __graft_b) - $loCum))
-               |END""".stripMargin))
-          .select((grp :+ col("value")): _*)
-      }
+      classicQuantile(scalarOf(args.head), compile(args(1), ctx))
 
     case "absent" => // 1 at steps where the vector has no series at all
       val v = compile(args.head, ctx)
@@ -1019,6 +978,63 @@ object Compiler {
         dropName(compile(other, ctx).withColumn("value", col("step_ms") / 1000.0))
     }
     case other => throw new ParseException(s"unsupported function '$other'")
+  }
+
+  /** Classic `histogram_quantile` over a vector carrying an `le` label.
+    * Prometheus bucketQuantile (promql/quantile.go): φ checked before
+    * bucket validity; missing +Inf bucket, <2 buckets, or an empty
+    * histogram → NaN; non-monotone cumulative counts (scrape races) are
+    * repaired by a running max; rank in the +Inf bucket returns the last
+    * finite bound; first-bucket ranks interpolate from an implicit 0
+    * lower bound unless that bound is ≤ 0. One groupBy per histogram
+    * series, then pure HOF expressions — no second shuffle. */
+  private def classicQuantile(phi: Double, v0: DataFrame): DataFrame = {
+    if (!v0.columns.contains("le"))
+      throw new ParseException("histogram_quantile needs an 'le' label")
+    val v = dropName(v0) // result series carry no metric name
+    val grp = ("step_ms" +: labelCols(v).filterNot(_ == "le")).map(col)
+    // Prometheus le labels are strings; "+Inf" isn't castable directly
+    val leD = when(col("le").isin("+Inf", "Inf", "inf"),
+      lit(Double.PositiveInfinity)).otherwise(col("le").cast("double"))
+    val agged = v.groupBy(grp: _*)
+      .agg(sort_array(collect_list(struct(leD.as("le"),
+        col("value").cast("double").as("c")))).as("__graft_bkts"))
+    if (phi.isNaN || phi < 0.0 || phi > 1.0) {
+      val out = if (phi.isNaN) Double.NaN
+        else if (phi < 0.0) Double.NegativeInfinity else Double.PositiveInfinity
+      agged.select((grp :+ lit(out).as("value")): _*)
+    } else {
+      val zero = "CAST(0.0 AS DOUBLE)"
+      val lo = s"IF(__graft_b = 1, $zero, element_at(__graft_bkts, __graft_b - 1).le)"
+      val loCum = s"IF(__graft_b = 1, $zero, element_at(__graft_cums, __graft_b - 1))"
+      agged
+        .withColumn("__graft_cums", expr( // running-max repaired cumulatives
+          s"""aggregate(__graft_bkts, CAST(array() AS ARRAY<DOUBLE>),
+             |  (acc, x) -> concat(acc, array(greatest(x.c,
+             |    IF(size(acc) = 0, $zero, element_at(acc, -1))))))""".stripMargin))
+        .withColumn("__graft_total", expr("element_at(__graft_cums, -1)"))
+        .withColumn("__graft_rank", col("__graft_total") * lit(phi))
+        .withColumn("__graft_b", expr( // first bucket whose cum ≥ rank
+          """aggregate(sequence(1, size(__graft_bkts)), size(__graft_bkts),
+            |  (acc, i) -> IF(element_at(__graft_cums, i) >= __graft_rank AND i < acc, i, acc))""".stripMargin))
+        .withColumn("value", expr(
+          s"""CASE
+             |  WHEN size(__graft_bkts) < 2 THEN CAST('NaN' AS DOUBLE)
+             |  WHEN element_at(__graft_bkts, -1).le != CAST('Infinity' AS DOUBLE)
+             |    THEN CAST('NaN' AS DOUBLE)
+             |  WHEN __graft_total <= 0 THEN CAST('NaN' AS DOUBLE)
+             |  WHEN __graft_b = size(__graft_bkts)
+             |    THEN element_at(__graft_bkts, size(__graft_bkts) - 1).le
+             |  WHEN __graft_b = 1 AND element_at(__graft_bkts, 1).le <= 0
+             |    THEN element_at(__graft_bkts, 1).le
+             |  ELSE $lo + (element_at(__graft_bkts, __graft_b).le - $lo) *
+             |    IF(element_at(__graft_cums, __graft_b) - $loCum = 0,
+             |       CAST('NaN' AS DOUBLE), -- 0/0 in Go: empty selected bucket
+             |       (__graft_rank - $loCum) /
+             |         (element_at(__graft_cums, __graft_b) - $loCum))
+             |END""".stripMargin))
+        .select((grp :+ col("value")): _*)
+    }
   }
 
   /** Samples frame carries histogram-typed samples (struct column `h` —

@@ -68,8 +68,10 @@ object NativeHistograms {
       aggregate(slice(buckets, lit(1), i + 1), lit(0.0), (a, y) => a + y.getField("c")))
     val z = zip_with(buckets, cums, (b, cum) =>
       struct(b.getField("idx").as("idx"), b.getField("c").as("c"), cum.as("cum")))
-    val hit = element_at(filter(z, e => e.getField("cum") >= target), 1)
-    coalesce(hit, element_at(z, -1))
+    // try_: an empty bucket array yields null instead of an ANSI
+    // out-of-bounds error; the callers' CASE guards decide the value
+    val hit = try_element_at(filter(z, e => e.getField("cum") >= target), lit(1))
+    coalesce(hit, try_element_at(z, lit(-1)))
   }
 
   /** Zero-bucket bounds, clamped to the observed sign range like

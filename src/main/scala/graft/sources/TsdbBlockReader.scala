@@ -493,53 +493,6 @@ object TsdbBlockReader {
       .distinct().collect().sorted.toSeq
   }
 
-  /** Distinct label NAMES across TSDB blocks, off each block's label
-    * offset table alone — even cheaper than [[labelValues]] (no
-    * label-index section, no symbols). */
-  def labelNames(spark: SparkSession, blockDirs: Seq[String]): Seq[String] = {
-    import spark.implicits._
-    require(blockDirs.nonEmpty, "no TSDB block directories to read")
-    val confBc = spark.sparkContext.broadcast(
-      new SerializableConf(spark.sparkContext.hadoopConfiguration))
-    spark.createDataset(blockDirs)
-      .repartition(blockDirs.size)
-      .mapPartitions { dirs =>
-        val conf = confBc.value.value
-        dirs.flatMap { d =>
-          val p = new Path(s"$d/index")
-          val fs = p.getFileSystem(conf)
-          val len = fs.getFileStatus(p).getLen
-          val in = fs.open(p)
-          try {
-            val ix = new TsdbBlock.IndexReadAt((pos, n) => {
-              val b = new Array[Byte](n)
-              in.readFully(pos, b, 0, n)
-              rangedIndexBytes.addAndGet(n.toLong)
-              rangedIndexReads.incrementAndGet()
-              b
-            }, len)
-            TsdbBlock.readLabelNamesAt(ix)
-          } finally in.close()
-        }
-      }
-      .distinct().collect().sorted.toSeq
-  }
-
-  /** PromQL serving straight off a RAW TSDB bucket: a `(samples,
-    * sourceByRange)` pair ready for `graft.api.PromEngine` — the fixed
-    * frame loads every listed block (the schema/metadata authority), and
-    * `sourceByRange` re-opens ONLY the blocks overlapping a query's
-    * AST-derived reach, with chunk-granular pruning inside them. An
-    * UNMIGRATED bucket then serves the same queries, with the same
-    * per-query block mint/maxt pruning, as a migrated one
-    * (`db/db.go:252-258`) — the "query it before the convert loop gets to
-    * it" half of a live migration. */
-  def promSource(spark: SparkSession, root: String, ulids: Seq[String])
-      : (DataFrame, (Long, Long) => DataFrame) = {
-    val bucket = openBucket(spark, root, ulids)
-    (bucket.select(), (lo: Long, hi: Long) => bucket.select(lo, hi))
-  }
-
   /** An OPEN raw-TSDB bucket for repeated serving — the Syncer/open-block
     * cache analog (`locate/syncer.go:115-218`): every block's index parses
     * ONCE at open (refs persisted + materialized), the label schema and
@@ -551,58 +504,56 @@ object TsdbBlockReader {
       metas: Seq[graft.etl.TsdbBlockMeta],
       refs: org.apache.spark.sql.Dataset[Ref],
       stones: Seq[(String, Long, Long, Long)],
-      labelNames: Seq[String],
+      /** the bucket-wide label schema, so every slice binds the same columns */
+      val labelColumns: Seq[String],
       confBc: org.apache.spark.broadcast.Broadcast[SerializableConf])
-      extends AutoCloseable {
-    /** Samples with ts ∈ [mintMs, maxtMs]: chunk-granular pruning via the
-      * cached refs' bounds (which subsumes block mint/maxt pruning — a
-      * non-overlapping block contributes no surviving ref). The label
-      * schema is the bucket-wide union, so every slice binds the same
-      * columns.
+      extends SeriesStore {
+    import SeriesStore.bounded
+
+    /** Cached refs of the series matching `matcherSets` with a chunk
+      * overlapping [mintMs, maxtMs] — chunk-granular pruning via the refs'
+      * bounds (which subsumes block mint/maxt pruning: a non-overlapping
+      * block contributes no surviving ref).
       *
-      * `matcherSets` (optional, OR of per-selector ANDs — see
-      * [[graft.promql.Compiler.selectorMatcherSets]]): label pruning AT THE
-      * REFS, before any segment I/O — a 1-series query over an open
+      * `matcherSets` (OR of per-selector ANDs — see
+      * [[graft.promql.Compiler.selectorMatcherSets]]) prune AT THE REFS,
+      * before any segment I/O — a 1-series query over an open
       * million-series bucket fetches that series' chunks, not the
       * window's. This is the serving-side `PostingsForMatchers` analog;
       * with the refs already parsed and cached, a map-predicate scan of
       * the in-memory refs replaces the postings algebra. */
-    def select(mintMs: Long = Long.MinValue,
-               maxtMs: Long = Long.MaxValue,
-               matcherSets: Seq[Seq[graft.promql.LabelMatcher]] = Seq.empty)
-        : DataFrame =
-      samplesFromRefs(spark,
-        refs.filter(col("maxt") >= mintMs && col("mint") <= maxtMs &&
-          graft.promql.Matchers.mapSetsPredicate(col("labels"), matcherSets)),
-        stones, mintMs, maxtMs, confBc, Some(labelNames))
+    private def live(mintMs: Long, maxtMs: Long,
+                     matcherSets: Seq[Seq[graft.promql.LabelMatcher]]) =
+      refs.filter(col("maxt") >= mintMs && col("mint") <= maxtMs &&
+        graft.promql.Matchers.mapSetsPredicate(col("labels"), matcherSets))
+
+    /** Samples with ts ∈ [mintMs, maxtMs] of the [[live]] refs. */
+    def select(mintMs: Long, maxtMs: Long,
+               matcherSets: Seq[Seq[graft.promql.LabelMatcher]]): DataFrame =
+      samplesFromRefs(spark, live(mintMs, maxtMs, matcherSets),
+        stones, mintMs, maxtMs, confBc, Some(labelColumns))
     def blockCount: Int = metas.size
 
-    /** Distinct values of `label` among series with a chunk overlapping
-      * [mintMs, maxtMs] and matching `matcherSets` — answered ENTIRELY off
-      * the cached refs: zero chunk I/O, zero index I/O (the reference's
-      * label_values is likewise dictionary-resolved, chunk/row-group
-      * granular rather than per-sample — `search/search.go:173-201`). */
+    /** Distinct values of `label` among the [[live]] refs — answered
+      * ENTIRELY off the cached refs: zero chunk I/O, zero index I/O (the
+      * reference's label_values is likewise dictionary-resolved, chunk/
+      * row-group granular rather than per-sample —
+      * `search/search.go:173-201`). */
     def labelValues(label: String,
-                    mintMs: Long = Long.MinValue, maxtMs: Long = Long.MaxValue,
-                    matcherSets: Seq[Seq[graft.promql.LabelMatcher]] = Seq.empty,
-                    limit: Int = 0)
-        : Seq[String] = {
+                    matcherSets: Seq[Seq[graft.promql.LabelMatcher]],
+                    mintMs: Long, maxtMs: Long, limit: Int): Seq[String] = {
       import spark.implicits._
-      bounded(refs.filter(col("maxt") >= mintMs && col("mint") <= maxtMs &&
-          graft.promql.Matchers.mapSetsPredicate(col("labels"), matcherSets))
+      bounded(live(mintMs, maxtMs, matcherSets)
         .select(try_element_at(col("labels"), lit(label)).as("v"))
         .filter(col("v").isNotNull)
         .distinct().orderBy(col("v")), limit).as[String].collect().toSeq
     }
 
     /** Distinct label names, same refs-only contract as [[labelValues]]. */
-    def labelNamesIn(mintMs: Long = Long.MinValue, maxtMs: Long = Long.MaxValue,
-                     matcherSets: Seq[Seq[graft.promql.LabelMatcher]] = Seq.empty,
-                     limit: Int = 0)
-        : Seq[String] = {
+    def labelNames(matcherSets: Seq[Seq[graft.promql.LabelMatcher]],
+                   mintMs: Long, maxtMs: Long, limit: Int): Seq[String] = {
       import spark.implicits._
-      bounded(refs.filter(col("maxt") >= mintMs && col("mint") <= maxtMs &&
-          graft.promql.Matchers.mapSetsPredicate(col("labels"), matcherSets))
+      bounded(live(mintMs, maxtMs, matcherSets)
         .select(explode(map_keys(col("labels"))).as("n"))
         .distinct().orderBy(col("n")), limit).as[String].collect().toSeq
     }
@@ -610,16 +561,15 @@ object TsdbBlockReader {
     /** Distinct label SETS matching the union of matcher sets — the
       * `/api/v1/series` answer, same refs-only zero-decode contract.
       *
-      * `limit > 0` bounds the DRIVER collect to `limit + 1` rows (one extra
-      * so callers can flag truncation) with both the canonical sort and the
-      * limit pushed into the DataFrame — the reference likewise truncates
-      * during materialization, before serialization
-      * (`search/materialize.go:53-58`, `api/http/query.go:636-641`); a
-      * matcherless `/series` against a 100M-series bucket must never
-      * materialize the full label-set universe on the driver. */
-    def seriesIn(mintMs: Long = Long.MinValue, maxtMs: Long = Long.MaxValue,
-                 matcherSets: Seq[Seq[graft.promql.LabelMatcher]] = Seq.empty,
-                 limit: Int = 0)
+      * `limit > 0` bounds the DRIVER collect to `limit + 1` rows with both
+      * the canonical sort and the limit pushed into the DataFrame — the
+      * reference likewise truncates during materialization, before
+      * serialization (`search/materialize.go:53-58`,
+      * `api/http/query.go:636-641`); a matcherless `/series` against a
+      * 100M-series bucket must never materialize the full label-set
+      * universe on the driver. */
+    def series(matcherSets: Seq[Seq[graft.promql.LabelMatcher]],
+               mintMs: Long, maxtMs: Long, limit: Int)
         : Seq[Map[String, String]] = {
       import spark.implicits._
       seriesFrame(mintMs, maxtMs, matcherSets, limit)
@@ -638,14 +588,10 @@ object TsdbBlockReader {
     private[graft] def seriesFrame(mintMs: Long, maxtMs: Long,
         matcherSets: Seq[Seq[graft.promql.LabelMatcher]], limit: Int)
         : DataFrame =
-      bounded(refs.filter(col("maxt") >= mintMs && col("mint") <= maxtMs &&
-          graft.promql.Matchers.mapSetsPredicate(col("labels"), matcherSets))
+      bounded(live(mintMs, maxtMs, matcherSets)
         // set-ops don't support MapType: canonicalize to sorted entry arrays
         .select(array_sort(map_entries(col("labels"))).as("kv"))
         .distinct().orderBy(col("kv")), limit)
-
-    private def bounded(df: DataFrame, limit: Int): DataFrame =
-      if (limit > 0) df.limit(limit + 1) else df
 
     /** Release the refs cache. Idempotent; a closed bucket's `select` still
       * answers (the refs dataset recomputes uncached) — close is a resource

@@ -1570,9 +1570,12 @@ class EtlSpec extends SparkSpec {
       go = !r.converged
     }
     val migrated = new graft.api.PromEngine(
-      ReferenceFormat.openReferenceStore(spark, out))
-    val (raw, byRange) = TsdbBlockReader.promSource(spark, root, ulids)
-    val live = new graft.api.PromEngine(raw, sourceByRange = Some(byRange))
+      new graft.sources.FrameStore(ReferenceFormat.openReferenceStore(spark, out)))
+    // range-bound (not matcher-aware) serving off the open bucket
+    val bucket = TsdbBlockReader.openBucket(spark, root, ulids)
+    val byRange = (lo: Long, hi: Long) => bucket.select(lo, hi)
+    val live = new graft.api.PromEngine(
+      new graft.sources.FrameStore(bucket.select(), Some(byRange)))
 
     def norm(ss: Seq[graft.api.PromEngine.Series]) =
       ss.map(s => (s.labels, s.points.sortBy(_._1))).sortBy(_._1.toSeq.sorted.mkString(","))
@@ -1598,10 +1601,7 @@ class EtlSpec extends SparkSpec {
     // OpenTsdbBucket.select(lo, hi, sets)) — identical answers, and a
     // 1-series query fetches ~that series' share of segment bytes, not
     // the whole window's
-    val bucket = TsdbBlockReader.openBucket(spark, root, ulids)
-    val matching = new graft.api.PromEngine(raw,
-      sourceByRangeMatching =
-        Some((lo, hi, sets) => bucket.select(lo, hi, sets)))
+    val matching = new graft.api.PromEngine(bucket)
     for (q <- Seq(
       """sum by (__name__) ({uid=~".+"})""",
       """pm0{uid="1"}""",
@@ -1629,41 +1629,25 @@ class EtlSpec extends SparkSpec {
     assert(bucket.labelValues("uid",
       matcherSets = Seq(Seq(graft.promql.MatchEq("__name__", "pm1"),
         graft.promql.MatchRe("uid", "[01]")))) == Seq("0", "1"))
-    assert(bucket.labelNamesIn() == Seq("__name__", "uid"))
+    assert(bucket.labelNames() == Seq("__name__", "uid"))
     // day-2 slice still sees both blocks' union? no — chunk-granular: only
     // block B's series overlap day 2, but labels are identical across
     // blocks in this fixture, so the answer is unchanged
-    assert(bucket.labelValues("uid", jan1 + D, Long.MaxValue) == Seq("0", "1", "2"))
+    assert(bucket.labelValues("uid", Nil, jan1 + D, Long.MaxValue) == Seq("0", "1", "2"))
     assert(TsdbBlockReader.segmentBytesRead.get() - g2 == 0,
       "label introspection must not touch segment files")
-    // the engine-level hook serves the same answers
-    val withIntro = new graft.api.PromEngine(raw,
-      sourceByRangeMatching =
-        Some((lo, hi, sets) => bucket.select(lo, hi, sets)),
-      labelIntrospection = Some(new graft.api.PromEngine.LabelIntrospection {
-        def labelValues(l: String, ms: Seq[graft.promql.LabelMatcher],
-                        lo: Long, hi: Long, limit: Int): Seq[String] =
-          bucket.labelValues(l, lo, hi,
-            if (ms.isEmpty) Seq.empty else Seq(ms), limit)
-        def labelNames(ms: Seq[graft.promql.LabelMatcher],
-                       lo: Long, hi: Long, limit: Int): Seq[String] =
-          bucket.labelNamesIn(lo, hi,
-            if (ms.isEmpty) Seq.empty else Seq(ms), limit)
-        def series(sets: Seq[Seq[graft.promql.LabelMatcher]],
-                   lo: Long, hi: Long, limit: Int): Seq[Map[String, String]] =
-          bucket.seriesIn(lo, hi, sets, limit)
-      }))
-    assert(withIntro.labelNames(Nil, jan1, at) ==
+    // the engine over the bucket store serves the same answers
+    assert(matching.labelNames(Nil, jan1, at) ==
       migrated.labelNames(Nil, jan1, at))
-    assert(withIntro.labelValues("uid", Nil, jan1, at)._1 ==
+    assert(matching.labelValues("uid", Nil, jan1, at)._1 ==
       migrated.labelValues("uid", Nil, jan1, at)._1)
     // /series off the refs alone: matches the migrated store's answer and
     // honors matcher-set union + limit/truncation
     val setQ = Seq(Seq(graft.promql.MatchEq("__name__", "pm0")),
       Seq(graft.promql.MatchEq("__name__", "pm1"),
         graft.promql.MatchEq("uid", "0")))
-    assert(withIntro.series(setQ, jan1, at) == migrated.series(setQ, jan1, at))
-    val (lim, trunc) = withIntro.series(setQ, jan1, at, limit = 2)
+    assert(matching.series(setQ, jan1, at) == migrated.series(setQ, jan1, at))
+    val (lim, trunc) = matching.series(setQ, jan1, at, limit = 2)
     assert(lim.size == 2 && trunc)
     // r19: the limit is pushed INTO the refs DataFrame — a limited /series
     // plans a GlobalLimit(limit+1) above the sort (top-K per partition +
@@ -1679,7 +1663,7 @@ class EtlSpec extends SparkSpec {
     assert(sf.count() <= 3, "bounded /series must collect <= limit+1 rows")
     // introspection and scan backends agree on the limited SUBSET too
     // (both sort by the canonical element-wise pair key)
-    assert(withIntro.series(setQ, jan1, at, limit = 2) ==
+    assert(matching.series(setQ, jan1, at, limit = 2) ==
       migrated.series(setQ, jan1, at, limit = 2))
     bucket.close()
   }

@@ -111,7 +111,7 @@ class EvalSpec extends SparkSpec {
     }
 
     // engine route: matcherless labelValues uses the fast path, limit works
-    val eng = new graft.api.PromEngine(fileSamples)
+    val eng = new graft.api.PromEngine(new graft.sources.FrameStore(fileSamples))
     val (vals, trunc) = eng.labelValues("uid", Nil, Long.MinValue / 2,
       Long.MaxValue / 2, limit = 3)
     assert(vals.size == 3 && trunc)
@@ -149,11 +149,11 @@ class EvalSpec extends SparkSpec {
         assert(fast.get == scanNames(lo, hi), s"($lo, $hi)")
       }
       // engine route: matcherless labelNames uses the footer path
-      val eng = new graft.api.PromEngine(fileSamples)
+      val eng = new graft.api.PromEngine(new graft.sources.FrameStore(fileSamples))
       assert(eng.labelNames(Nil, T0 + 5 * DAY, T0 + 12 * DAY - 1) ==
         scanNames(T0 + 5 * DAY, T0 + 12 * DAY - 1))
       // non-file-backed view falls back to the schema answer
-      assert(new graft.api.PromEngine(TimeSeriesModel.samples(t.events))
+      assert(new graft.api.PromEngine(new graft.sources.FrameStore(TimeSeriesModel.samples(t.events)))
         .labelNames(Nil, 0L, Long.MaxValue / 2) == lbls.sorted)
     } finally spark.conf.unset("spark.hadoop.graft.test.marker")
   }
@@ -175,7 +175,7 @@ class EvalSpec extends SparkSpec {
     val df = base.select(cols.toSeq: _*)
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
-      val eng = new graft.api.PromEngine(df)
+      val eng = new graft.api.PromEngine(new graft.sources.FrameStore(df))
       val names = eng.labelNames(Seq(MatchEq("__name__", "m")), 0L, Long.MaxValue / 2)
       assert(names == Seq("__name__", "uid", "x7"))
     } finally spark.conf.unset("spark.sql.codegen.factoryMode")

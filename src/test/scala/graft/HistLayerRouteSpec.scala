@@ -190,8 +190,8 @@ class HistLayerRouteSpec extends SparkSpec {
 
   test("PromEngine(histLayers=…) serves histogram range queries identically") {
     val (samples, layers, _, _) = fixture
-    val plain = new graft.api.PromEngine(samples)
-    val layered = new graft.api.PromEngine(samples, histLayers = layers)
+    val plain = new graft.api.PromEngine(new graft.sources.FrameStore(samples))
+    val layered = new graft.api.PromEngine(new graft.sources.FrameStore(samples), histLayers = layers)
     val q = "histogram_quantile(0.9, rate(hreq[6h]))"
     val (s0, e0, st0) = (T0 + 12 * H, T0 + 60 * H, 2 * H)
     assert(layered.rangeQuery(q, s0, e0, st0) == plain.rangeQuery(q, s0, e0, st0))

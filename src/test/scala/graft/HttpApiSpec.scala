@@ -4,7 +4,7 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import graft.api.{HttpApi, PromEngine}
 import graft.model.TimeSeriesModel
-import graft.sources.Tables
+import graft.sources.{FrameStore, Tables}
 
 /** End-to-end HTTP surface: Prometheus-compatible endpoints + envelope
   * (ref api/http/query.go response shapes). */
@@ -14,7 +14,8 @@ class HttpApiSpec extends SparkSpec {
   private val TI = 1704067200000L + 14 * DAY
 
   private lazy val api = new HttpApi(
-    new PromEngine(TimeSeriesModel.samples(Tables(spark, sf()).events), lookbackMs = DAY)).start()
+    new PromEngine(new FrameStore(TimeSeriesModel.samples(Tables(spark, sf()).events)),
+      lookbackMs = DAY)).start()
   private lazy val client = HttpClient.newHttpClient()
 
   private def enc(s: String): String =
@@ -104,7 +105,7 @@ class HttpApiSpec extends SparkSpec {
       .toDF("__name__", "uid", "ts_ms", "sample_id", "value")
       .withColumn("series_hash", xxhash64($"__name__", $"uid"))
       .withColumn("h", h)
-    val api2 = new HttpApi(new PromEngine(df)).start()
+    val api2 = new HttpApi(new PromEngine(new FrameStore(df))).start()
     try {
       def get2(pq: String): String = client.send(
         HttpRequest.newBuilder(URI.create(
@@ -127,6 +128,25 @@ class HttpApiSpec extends SparkSpec {
       assert(get2("/api/v1/label/h/values").contains(""""data":[]"""))
       assert(!get2("/api/v1/series?match[]=hreq").contains("\"h\""))
     } finally api2.stop()
+  }
+
+  test("stop() ends the request worker threads, so an embedding JVM can exit") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    def workers(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala.toSet
+      .filter(t => !t.isDaemon && t.getName.matches("pool-\\d+-thread-\\d+"))
+    val before = workers()
+    val df = Seq(("m", "a", 1000L, 1L, 1.0))
+      .toDF("__name__", "uid", "ts_ms", "sample_id", "value")
+    val api2 = new HttpApi(new PromEngine(new FrameStore(df))).start()
+    client.send(HttpRequest.newBuilder(URI.create(
+      s"http://127.0.0.1:${api2.boundPort}/metrics")).GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+    val mine = workers() -- before
+    assert(mine.nonEmpty, "the request ran on a pool worker")
+    api2.stop()
+    mine.foreach(_.join(10000))
+    assert(mine.forall(!_.isAlive), s"workers alive after stop(): ${mine.filter(_.isAlive)}")
   }
 
   test("/metrics exposes requests_total and requests_seconds instrumentation") {

@@ -301,8 +301,8 @@ class LayerRouteSpec extends SparkSpec {
 
   test("PromEngine(layers=…) serves range queries from the layer, same answers") {
     val (samples, layers, _, _) = fixture
-    val plain = new graft.api.PromEngine(samples)
-    val layered = new graft.api.PromEngine(samples, layers = layers)
+    val plain = new graft.api.PromEngine(new graft.sources.FrameStore(samples))
+    val layered = new graft.api.PromEngine(new graft.sources.FrameStore(samples), layers = layers)
     val q = """rate({__name__="ctr"}[6h])"""
     val (start, end, step) = (T0 + 12 * H, T0 + 60 * H, 2 * H)
     assert(layered.rangeQuery(q, start, end, step) == plain.rangeQuery(q, start, end, step))
@@ -324,8 +324,8 @@ class LayerRouteSpec extends SparkSpec {
       (0 to 4).map(d => java.time.LocalDate.parse("2024-01-01").plusDays(d).toString))
     val found = Downsample.discoverLayers(spark, layout)
     assert(found.keySet == Set(Downsample.Res1h))
-    val eng = new graft.api.PromEngine(samples, layers = found)
-    val plain = new graft.api.PromEngine(samples)
+    val eng = new graft.api.PromEngine(new graft.sources.FrameStore(samples), layers = found)
+    val plain = new graft.api.PromEngine(new graft.sources.FrameStore(samples))
     val q = """sum_over_time({__name__="gau"}[6h])"""
     val (s0, e0, st0) = (T0 + 12 * H, T0 + 60 * H, 2 * H)
     assert(eng.rangeQuery(q, s0, e0, st0) == plain.rangeQuery(q, s0, e0, st0))
@@ -334,8 +334,8 @@ class LayerRouteSpec extends SparkSpec {
 
   test("max_source_resolution caps which layers may serve (Thanos param)") {
     val (samples, layers, _, _) = fixture
-    val eng = new graft.api.PromEngine(samples, layers = layers)
-    val plain = new graft.api.PromEngine(samples)
+    val eng = new graft.api.PromEngine(new graft.sources.FrameStore(samples), layers = layers)
+    val plain = new graft.api.PromEngine(new graft.sources.FrameStore(samples))
     val q = """increase({__name__="ctr"}[6h])"""
     val (s0, e0, st0) = (T0 + 12 * H, T0 + 60 * H, 2 * H)
     def scanned(e: graft.api.PromEngine, cap: Long) =
@@ -392,8 +392,8 @@ class LayerRouteSpec extends SparkSpec {
 
   test("hybrid route reads less than raw: slices bounded by the grid span, not the window") {
     val (samples, layers, _, _) = fixture
-    val eng = new graft.api.PromEngine(samples, layers = layers)
-    val plain = new graft.api.PromEngine(samples)
+    val eng = new graft.api.PromEngine(new graft.sources.FrameStore(samples), layers = layers)
+    val plain = new graft.api.PromEngine(new graft.sources.FrameStore(samples))
     // 48h window, 4h grid span, misaligned start/step: raw side of the
     // hybrid reads ~2×(span+res), the layer serves the other ~46h
     val q = """increase({__name__="ctr"}[48h])"""

@@ -220,8 +220,9 @@ class PromXorSpec extends SparkSpec {
     // PromQL served straight off the reference bucket equals the engine
     // over the original samples frame
     val engBucket = new graft.api.PromEngine(
-      ReferenceFormat.selectReferenceStore(spark, out), lookbackMs = day)
-    val engRaw = new graft.api.PromEngine(samples, lookbackMs = day)
+      new graft.sources.FrameStore(ReferenceFormat.selectReferenceStore(spark, out)),
+      lookbackMs = day)
+    val engRaw = new graft.api.PromEngine(new graft.sources.FrameStore(samples), lookbackMs = day)
     val q = """sum by (__name__) ({uid!=""})"""
     val ti = t0 + 14 * day
     def res(e: graft.api.PromEngine) =
@@ -266,12 +267,8 @@ class PromXorSpec extends SparkSpec {
       Seq(MatchEq("b", "")), t0 + day, t0 + 2 * day - 1)
     assert(d2b.count() == 1)
     // and the PromEngine metadata surface works on the bounded frame
-    val meta = ReferenceFormat.bucketMeta(spark, out)
     val eng = new graft.api.PromEngine(
-      ReferenceFormat.selectReferenceStore(spark, out, meta = Some(meta)),
-      lookbackMs = day,
-      sourceByRange = Some((lo, hi) =>
-        ReferenceFormat.selectReferenceStore(spark, out, Nil, lo, hi, meta = Some(meta))))
+      graft.sources.SeriesStore.reference(spark, out), lookbackMs = day)
     val (names, _) = (eng.labelNames(Nil, t0 + day, t0 + 2 * day - 1), ())
     assert(names.contains("a") && !names.contains("b"),
       s"day-2 label names must not claim b: $names")
@@ -308,9 +305,9 @@ class PromXorSpec extends SparkSpec {
       asked ::= (lo, hi)
       samples.filter(col("ts_ms").between(lo, hi))
     }
-    val full = new graft.api.PromEngine(samples, lookbackMs = day)
-    val ranged = new graft.api.PromEngine(samples, lookbackMs = day,
-      sourceByRange = Some(src))
+    val full = new graft.api.PromEngine(new graft.sources.FrameStore(samples), lookbackMs = day)
+    val ranged = new graft.api.PromEngine(
+      new graft.sources.FrameStore(samples, Some(src)), lookbackMs = day)
     val ti = t0 + 14 * day
     for (q <- Seq("sum by (__name__) ({uid!=\"\"})",
                   "rate({__name__=\"purchase\"}[2d])")) {
@@ -743,20 +740,20 @@ class PromXorSpec extends SparkSpec {
       Set("___cf_meta_chunk_0", "___cf_meta_chunk_1", "___cf_meta_chunk_2"))
   }
 
-  test("PromQL histogram functions served off a reference bucket match the raw frame") {
+  private val histT0 = 1704067200000L
+
+  /** Two cumulative (counter) native histogram series `m{svc}`, hourly
+    * over a day — enc 2 chunks in a bucket. */
+  private def nativeHistSamples(): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val t0 = 1704067200000L
-    // two cumulative (counter) histogram series, hourly over a day — enc 2
-    // chunks in the bucket; rate()/histogram_count/sum route through the
-    // real compiler path on BOTH engines
     val rows = for { s <- Seq("x", "y"); k <- 0 until 24 } yield (s, k)
     val base = rows.toDF("svc", "k")
-      .withColumn("ts_ms", lit(t0) + col("k") * lit(3600000L))
+      .withColumn("ts_ms", lit(histT0) + col("k") * lit(3600000L))
     val mult = when(col("svc") === "x", 2.0).otherwise(5.0)
     val cnt = (col("k") + 1) * mult
     val emptyB = array().cast("array<struct<idx:int,c:double>>")
-    val samples = base.select(
+    base.select(
       lit("m").as("__name__"), col("svc"), col("ts_ms"), cnt.as("value"),
       col("ts_ms").as("sample_id"),
       xxhash64(lit("m"), col("svc")).as("series_hash"),
@@ -764,30 +761,101 @@ class PromXorSpec extends SparkSpec {
         lit(0).as("sch"), lit(0.001953125).as("zthr"), lit(0.0).as("zcnt"),
         array(struct(lit(1).as("idx"), cnt.as("c"))).as("pos"),
         emptyB.as("neg"), lit(null).cast("array<double>").as("cb")).as("h"))
+  }
+
+  /** Classic `req_seconds_bucket{job, le}` series, per minute for 4 h:
+    * cumulative per-minute increments 2, 6, 9.5, 10 across the le bounds
+    * (×3 for db), so the 0.9 rank interpolates inside (0.5, 1]. */
+  private def classicBucketSamples(): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val les = Seq("0.1", "0.5", "1", "+Inf")
+    val rows = for { job <- Seq("api", "db"); (le, i) <- les.zipWithIndex
+                     k <- 0 until 240 } yield (job, le, i, k)
+    rows.toDF("job", "le", "i", "k")
+      .select(lit("req_seconds_bucket").as("__name__"), col("job"), col("le"),
+        (lit(histT0) + col("k") * lit(60000L)).as("ts_ms"),
+        (col("k") * element_at(typedLit(Seq(2.0, 6.0, 9.5, 10.0)), col("i") + 1) *
+          when(col("job") === "api", 1.0).otherwise(3.0)).as("value"))
+      .withColumn("sample_id", col("ts_ms"))
+      .withColumn("series_hash", xxhash64(col("__name__"), col("job"), col("le")))
+  }
+
+  private def sameSeries(q: String, a: Seq[graft.api.PromEngine.Series],
+                         b: Seq[graft.api.PromEngine.Series]): Unit = {
+    val (ma, mb) = (a.map(s => s.labels -> s.points).toMap,
+                    b.map(s => s.labels -> s.points).toMap)
+    assert(ma.keySet == mb.keySet && ma.nonEmpty, s"$q: ${ma.keySet} vs ${mb.keySet}")
+    ma.keySet.foreach { k =>
+      val (pa, pb) = (ma(k), mb(k))
+      assert(pa.map(_._1) == pb.map(_._1), s"$q/$k timestamps")
+      pa.zip(pb).foreach { case ((_, va), (_, vb)) =>
+        assert(va == vb || math.abs(va - vb) < 1e-9, s"$q/$k: $va vs $vb") }
+    }
+  }
+
+  test("PromQL histogram functions served off a reference bucket match the raw frame") {
+    val t0 = histT0
+    // rate()/histogram_count/sum route through the real compiler path on
+    // BOTH engines
+    val samples = nativeHistSamples()
     val out = java.nio.file.Files.createTempDirectory("graft-refnhq").toString
     ReferenceFormat.convertReference(spark, samples, out, numShards = 2)
 
-    val day = 86400000L
-    val meta = ReferenceFormat.bucketMeta(spark, out)
     val engBucket = new graft.api.PromEngine(
-      ReferenceFormat.selectReferenceStore(spark, out, meta = Some(meta)),
-      lookbackMs = 3600000L,
-      sourceByRange = Some((lo, hi) =>
-        ReferenceFormat.selectReferenceStore(spark, out, Nil, lo, hi, Some(meta))))
-    val engRaw = new graft.api.PromEngine(samples, lookbackMs = 3600000L)
+      graft.sources.SeriesStore.reference(spark, out), lookbackMs = 3600000L)
+    val engRaw = new graft.api.PromEngine(new graft.sources.FrameStore(samples), lookbackMs = 3600000L)
     val ti = t0 + 20 * 3600000L
     for (q <- Seq("histogram_count(rate(m[4h]))", "histogram_sum(rate(m[4h]))",
-                  "histogram_quantile(0.9, sum by (svc) (rate(m[4h])))")) {
-      val a = engBucket.instantQuery(q, ti).map(s => s.labels -> s.points).toMap
-      val b = engRaw.instantQuery(q, ti).map(s => s.labels -> s.points).toMap
-      assert(a.keySet == b.keySet && a.nonEmpty, s"$q: ${a.keySet} vs ${b.keySet}")
-      a.keySet.foreach { k =>
-        val (pa, pb) = (a(k), b(k))
-        assert(pa.map(_._1) == pb.map(_._1), s"$q/$k timestamps")
-        pa.zip(pb).foreach { case ((_, va), (_, vb)) =>
-          assert(math.abs(va - vb) < 1e-9, s"$q/$k: $va vs $vb") }
-      }
-    }
+                  "histogram_quantile(0.9, sum by (svc) (rate(m[4h])))"))
+      sameSeries(q, engBucket.instantQuery(q, ti), engRaw.instantQuery(q, ti))
+  }
+
+  test("classic-bucket histogram_quantile off a reference bucket matches the raw frame") {
+    val t0 = histT0
+    // classic `le` buckets only: the bucket still carries the native `h`
+    // column (all null), which must not trip the native quantile's
+    // bucket walk over empty arrays
+    val samples = classicBucketSamples()
+    val out = java.nio.file.Files.createTempDirectory("graft-refclassic").toString
+    ReferenceFormat.convertReference(spark, samples, out, numShards = 2)
+    val engBucket = new graft.api.PromEngine(
+      graft.sources.SeriesStore.reference(spark, out), lookbackMs = 3600000L)
+    val engRaw = new graft.api.PromEngine(new graft.sources.FrameStore(samples), lookbackMs = 3600000L)
+    val q = "histogram_quantile(0.9, sum by (le, job) (rate(req_seconds_bucket[5m])))"
+    val (ti, end) = (t0 + 2 * 3600000L, t0 + 3 * 3600000L)
+    def norm(ss: Seq[graft.api.PromEngine.Series]) =
+      ss.map(s => s.labels -> s.points).toMap
+    val want = norm(engRaw.instantQuery(q, ti))
+    assert(want.size == 2 && want.values.forall(_.nonEmpty))
+    assert(norm(engBucket.instantQuery(q, ti)) == want)
+    assert(norm(engBucket.rangeQuery(q, ti, end, 600000L)) ==
+      norm(engRaw.rangeQuery(q, ti, end, 600000L)))
+  }
+
+  test("native and classic histograms in one reference bucket: each quantile takes its own path") {
+    val native = nativeHistSamples()
+    val classic = classicBucketSamples()
+    val out = java.nio.file.Files.createTempDirectory("graft-refmixedh").toString
+    ReferenceFormat.convertReference(spark,
+      native.unionByName(classic, allowMissingColumns = true), out, numShards = 2)
+    def eng(store: graft.sources.SeriesStore) =
+      new graft.api.PromEngine(store, lookbackMs = 3600000L)
+    val engBucket = eng(graft.sources.SeriesStore.reference(spark, out))
+    val (engNative, engClassic) =
+      (eng(new graft.sources.FrameStore(native)), eng(new graft.sources.FrameStore(classic)))
+    // native queries grouping away `le` answer as over the native series
+    // alone — the bucket's `le` column must not pull in a classic side
+    val tn = histT0 + 20 * 3600000L
+    for (q <- Seq("histogram_quantile(0.9, sum by (svc) (rate(m[4h])))",
+                  "histogram_quantile(0.9, sum(rate(m[4h])))"))
+      sameSeries(q, engBucket.instantQuery(q, tn), engNative.instantQuery(q, tn))
+    // the classic query over the same bucket matches the classic frame
+    val q = "histogram_quantile(0.9, sum by (le, job) (rate(req_seconds_bucket[5m])))"
+    val (tc, end) = (histT0 + 2 * 3600000L, histT0 + 3 * 3600000L)
+    sameSeries(q, engBucket.instantQuery(q, tc), engClassic.instantQuery(q, tc))
+    sameSeries(q, engBucket.rangeQuery(q, tc, end, 600000L),
+      engClassic.rangeQuery(q, tc, end, 600000L))
   }
 
   test("mixed V1/V2 shards in one bucket: one series identity at query granularity") {
@@ -831,7 +899,7 @@ class PromXorSpec extends SparkSpec {
       .agg(count_distinct(col("series_hash")).as("n")).filter(col("n") > 1)
     assert(multiId.isEmpty, "a series split identities across V1/V2 days")
     // a lookback-crossing PromQL query stitches the two days into one series
-    val eng = new graft.api.PromEngine(mixed, lookbackMs = day)
+    val eng = new graft.api.PromEngine(new graft.sources.FrameStore(mixed), lookbackMs = day)
     val res = eng.instantQuery("""count by (__name__) ({__name__="purchase"})""",
       t0 + 2 * day - 1)
     assert(res.size == 1)

@@ -186,7 +186,7 @@ class PromqlHistogramSpec extends SparkSpec {
   }
 
   test("PromEngine serves histogram functions over h-carrying samples") {
-    val eng = new graft.api.PromEngine(samples)
+    val eng = new graft.api.PromEngine(new graft.sources.FrameStore(samples))
     val out = eng.instantQuery("histogram_quantile(0.9, reqs)", T)
       .map(s => s.labels("uid") -> s.points.head._2).toMap
     assert(math.abs(out("1") - math.pow(2.0, 2.76)) < 1e-12)
@@ -316,7 +316,7 @@ class PromqlHistogramSpec extends SparkSpec {
   }
 
   test("top-level selector serves native-histogram samples through the engine") {
-    val eng = new graft.api.PromEngine(samples)
+    val eng = new graft.api.PromEngine(new graft.sources.FrameStore(samples))
     val res = eng.instantQuery("reqs", T)
     assert(res.size == 2)
     val s1 = res.find(_.labels("uid") == "1").get
@@ -334,7 +334,7 @@ class PromqlHistogramSpec extends SparkSpec {
   }
 
   test("rate and sum over histogram series serve histogram results") {
-    val eng = new graft.api.PromEngine(samples)
+    val eng = new graft.api.PromEngine(new graft.sources.FrameStore(samples))
     // uid=1: delta cnt 2, only bucket idx2 grew (+2); extrapolation factor 2
     // over a 120 s window → rate = 2·2/120 = 1/30; uid=2's single sample
     // can't produce a rate and drops, exactly like the float path
@@ -359,7 +359,7 @@ class PromqlHistogramSpec extends SparkSpec {
         .withColumn("value", lit(7.0))
         .withColumn("series_hash", xxhash64(col("__name__"), col("uid")))
         .withColumn("h", lit(null).cast(samples.schema("h").dataType.sql)))
-    val eng = new graft.api.PromEngine(mixed)
+    val eng = new graft.api.PromEngine(new graft.sources.FrameStore(mixed))
     val res = eng.instantQuery("reqs", T)
     assert(res.size == 3)
     val f9 = res.find(_.labels("uid") == "9").get

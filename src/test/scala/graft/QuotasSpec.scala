@@ -65,14 +65,14 @@ class QuotasSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("graft-refquota").toString
     ReferenceFormat.convertReference(spark, samples, out, numShards = 2)
     val meta = ReferenceFormat.bucketMeta(spark, out)
-    def engine(q: Quotas) = new graft.api.PromEngine(
+    val store = new graft.sources.FrameStore(
       ReferenceFormat.selectReferenceStore(spark, out, meta = Some(meta)),
-      lookbackMs = day, quotas = q,
-      sourceByRange = Some((lo, hi) =>
+      Some((lo, hi) =>
         ReferenceFormat.selectReferenceStore(spark, out, Nil, lo, hi, Some(meta))))
+    def engine(q: Quotas) = new graft.api.PromEngine(store, lookbackMs = day, quotas = q)
     val (q, ti) = ("""sum by (__name__) ({uid!=""})""", t0 + 2 * day)
 
-    // the rangedSamples indirection still routes through Quotas.collect:
+    // the range-bound store select still routes through Quotas.collect:
     // a mid-scan byte ceiling trips on the bucket's chunk bytes...
     val exB = intercept[QuotaExceededException](
       engine(Quotas(maxBytes = Some(1L << 40), maxBytesMidScan = Some(16L)))

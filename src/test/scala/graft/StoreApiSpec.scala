@@ -107,7 +107,7 @@ class StoreApiSpec extends SparkSpec {
       timeSeconds = (T0 + DAY) / 1000, lookbackDeltaSeconds = DAY / 1000))
     assert(resp.series.size == 1 && resp.warnings.isEmpty)
     // same engine, same answer as the direct PromQL path
-    val direct = new graft.api.PromEngine(samples, lookbackMs = DAY)
+    val direct = new graft.api.PromEngine(new graft.sources.FrameStore(samples), lookbackMs = DAY)
       .instantQuery("sum(purchase)", T0 + DAY)
     assert(resp.series == direct)
     // stats: the scan produced rows, and the driver-side peak is the result

@@ -43,6 +43,14 @@ class TokenCountsSpec extends SparkSpec {
       size(expr("filter(split(trim(text), '\\\\s+'), x -> x rlike '[A-Za-z]')")).as("e"))
     assert(got.filter(col("c") =!= col("e")).count() === 0)
     assert(got.agg(sum("c")).head.getLong(0) > 0)
+    // null elements never match (filter drops `null rlike …`): every "fox"
+    // token nulled out, plus a trailing null
+    val withNulls = df.select(expr("concat(transform(split(trim(text), " +
+      "'\\\\s+'), x -> nullif(x, 'fox')), array(CAST(NULL AS STRING)))").as("toks"))
+    val gotN = withNulls.select(CountAlphaTokens(col("toks")).as("c"),
+      size(expr("filter(toks, x -> x rlike '[A-Za-z]')")).as("e"))
+    assert(gotN.filter(col("c") =!= col("e")).count() === 0)
+    assert(gotN.agg(sum("c")).head.getLong(0) > 0)
   }
 
   test("CountAlphaChars ≡ length(regexp_replace(s, '[^A-Za-z]', ''))") {
