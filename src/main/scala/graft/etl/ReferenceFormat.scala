@@ -14,7 +14,18 @@ import graft.functions.{PromFrameCols, PromFramesDecode, PromLabelIndex, PromLab
   *   <out>/<extLabelsHash>/<YYYY-MM-DD>/<shard>.chunks.parquet
   *   <out>/[<extLabelsHash>/]<YYYY-MM-DD>/meta.pb        (proto, hash elided when 0)
   *   <out>/<extLabelsHash>/stream.pb                     (when external labels set)
+  *   <out>/<extLabelsHash>/<YYYY-MM-DD>/_graft_float_only (engine-side, empty)
+  *   <out>/_graft_bucket_meta.json                       (engine-side label union)
   * }}}
+  *
+  * `_graft_float_only` proves the day holds no native-histogram sample:
+  * [[convertReference]] writes it after the day's parquet files when none
+  * of the day's samples carries `h`, and a re-convert clears it with the
+  * day directory. It counts only while no `*.parquet` file of the day is
+  * newer than it, so a foreign converter uploading into the day demotes
+  * it. A read whose days all carry a valid marker omits the `h` column
+  * and is served on the plain float path; buckets from other writers
+  * have no markers and keep `h`.
   *
   * labels file columns (ref `schema/schema.go:83-99`, parquet-go sorts group
   * fields by name): `___cf_meta_index` (varint presence list,
@@ -57,6 +68,11 @@ object ReferenceFormat {
     * indexes and the gateway both ignore it): the union of label columns
     * ever written, so opening an OWN bucket needs no footer union. */
   val BucketMetaFile = "_graft_bucket_meta.json"
+  /** Engine-side per-day marker (empty, underscore-prefixed like the
+    * sidecar): the day holds no native-histogram sample, so a read of only
+    * such days needs no `h` column. Valid only while no `*.parquet` file of
+    * the day is newer than it (see [[DayFacts.floatOnly]]). */
+  val FloatOnlyMarker = "_graft_float_only"
 
   /** xxhash64(seed 0) over sorted key‖value — schema.ExternalLabels.Hash()
     * (ref `schema/block.go:44-67`); 0 when empty. */
@@ -123,17 +139,20 @@ object ReferenceFormat {
 
     val hCol = if (hasH) col("h")
                else lit(null).cast(graft.functions.HistChunk.HistType)
+    // `_has_h` rides along (never written) so the float-only proof below
+    // reads the cached rows instead of re-running the dedup shuffle
     val rows = dedup
       .groupBy(col("date") +: lblCols.map(col): _*)
       .agg(sort_array(collect_list(struct(col("ts_ms"),
-        col("value").cast("double").as("value"), hCol.as("h")))).as("pts"))
+        col("value").cast("double").as("value"), hCol.as("h")))).as("pts"),
+        max(hCol.isNotNull).as("_has_h"))
       .withColumn("frames", PromFrameCols(col("pts"))).drop("pts")
       .withColumn(HashCol, PromLabelsHash(lblArr))
       .withColumn(IndexCol, PromLabelIndex(flags))
       .withColumn("shard",
         pmod(xxhash64(lblCols.map(n => coalesce(col(n).cast("string"), lit(""))): _*),
           lit(numShards.toLong)).cast("int"))
-      .select(Seq(col("date"), col("shard"), col(HashCol), col(IndexCol)) ++
+      .select(Seq(col("date"), col("shard"), col(HashCol), col(IndexCol), col("_has_h")) ++
         ChunkCols.zipWithIndex.map { case (c, i) =>
           element_at(col("frames"), i + 1).as(c) } ++
         lblCols.map(n => col(n).cast("string").as(LabelPrefix + n)): _*)
@@ -188,6 +207,17 @@ object ReferenceFormat {
         fs.delete(new Path(s"$outDir/_tmp_ref_ec"), true)
       }
 
+      // float-only proof, per written day: after the day's parquet files
+      // (so the marker is never older than them) and before the sidecar
+      // stamp; the day-dir clear above already removed a previous marker
+      val histDays: Set[String] =
+        if (!hasH) Set.empty
+        else rows.filter(col("_has_h")).select("date").distinct()
+          .collect().map(_.getString(0)).toSet
+      dates.filterNot(histDays).foreach { d =>
+        writeBytes(fs, new Path(s"$outDir/$eh/$d/$FloatOnlyMarker"), Array.emptyByteArray)
+      }
+
       dates.foreach { d =>
         val dayStart = java.time.LocalDate.parse(d)
           .atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli
@@ -230,13 +260,9 @@ object ReferenceFormat {
       // first stamp of a bucket that predates the sidecar (or lost it):
       // seed with the one-time footer union so the invariant
       // sidecar ⊇ every label column in the bucket holds from here on
-      // list driver-side first: an empty glob would make spark.read throw
-      // (and log at ERROR) before the Try catches it — resolving the file
-      // list here keeps a racing/empty day quiet and skips the read cleanly
-      val files = servableDayDirs(fs, dir).flatMap { d =>
-        scala.util.Try(fs.globStatus(new Path(s"$d/*.labels.parquet")).toSeq)
-          .getOrElse(Seq.empty).map(_.getPath.toString)
-      }
+      // (the catalog listing names the files: no glob for spark.read to
+      // fail on, and an empty bucket skips the read cleanly)
+      val files = servableDays(fs, dir).flatMap(_.labelsFiles)
       if (files.isEmpty) Nil
       else scala.util.Try(
         spark.read.option("mergeSchema", "true").parquet(files: _*)
@@ -412,17 +438,17 @@ object ReferenceFormat {
     // a half-written day (crashed converter) or a deletion-marked day is
     // invisible, as in the reference's Discoverer
     val fs = FileSystem.get(new Path(dir).toUri, spark.sparkContext.hadoopConfiguration)
-    val dayDirs = servableDayDirs(fs, dir)
+    val days = servableDays(fs, dir)
     // mergeSchema: per-shard schemas are data-driven in real buckets
     // (schema/schema.go:82-97) — a label present only in some shards must
     // read as null elsewhere, not vanish with a sampled-file schema
     val lbl = spark.read.option("mergeSchema", "true")
-      .parquet(dayDirs.map(d => s"$d/*.labels.parquet"): _*)
+      .parquet(days.flatMap(_.labelsFiles): _*)
       .withColumn("_stem", regexp_replace(col("_metadata.file_path"),
         lit("\\.labels\\.parquet$"), lit("")))
       .withColumn("_ri", col("_metadata.row_index"))
     val chk = chunksProjection(spark.read.schema(ChunksSchema)
-      .parquet(dayDirs.map(d => s"$d/*.chunks.parquet"): _*)
+      .parquet(days.flatMap(_.chunksFiles): _*)
       .withColumn("_stem", regexp_replace(col("_metadata.file_path"),
         lit("\\.chunks\\.parquet$"), lit("")))
       .withColumn("_ri", col("_metadata.row_index")))
@@ -511,16 +537,8 @@ object ReferenceFormat {
         StructType(StructField(IndexCol, BinaryType) +:
           cols.map(c => StructField(c, StringType)))
       case None =>
-        val days = catalog.toSeq
-          .collect { case ((hash, date), f) if f.meta && !f.marked && f.shardFiles =>
-            s"$dir/$hash/$date" }.sorted
-        // resolve the file list driver-side (see updateBucketMetaSidecar):
-        // an empty/racing glob must degrade quietly, not ERROR-log through
-        // spark.read before the Try catches it
-        val files = days.flatMap { d =>
-          scala.util.Try(fs.globStatus(new Path(s"$d/*.labels.parquet")).toSeq)
-            .getOrElse(Seq.empty).map(_.getPath.toString)
-        }
+        // the files the catalog listed (see updateBucketMetaSidecar)
+        val files = servableDays(dir, catalog).flatMap(_.labelsFiles)
         if (files.isEmpty) new StructType()
         else scala.util.Try(
           spark.read.option("mergeSchema", "true").parquet(files: _*).schema)
@@ -562,25 +580,20 @@ object ReferenceFormat {
                            maxtMs: Long = Long.MaxValue,
                            meta: Option[BucketMeta] = None): DataFrame = {
     val fs = FileSystem.get(new Path(dir).toUri, spark.sparkContext.hadoopConfiguration)
-    val cap = 253402214400000L
-    def day(ms: Long) = java.time.Instant.ofEpochMilli(ms.max(0L).min(cap))
-      .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
-    val (loD, hiD) = (day(mintMs), day(maxtMs))
+    val (loD, hiD) = (dayStr(mintMs), dayStr(maxtMs))
     // one listing pass gated on discovery hygiene (meta.pb present, no
     // deletion marker — ref Discoverer + DeletionMarkerFilter); the bounded
     // subset selects in memory
-    val allDays = servableDayDirs(fs, dir)
-    val inRange = allDays.filter { d =>
-      val n = d.substring(d.lastIndexOf('/') + 1); n >= loD && n <= hiD
-    }
+    val allDays = servableDays(fs, dir)
+    val inRange = allDays.filter(d => d.date >= loD && d.date <= hiD)
     // schema-correct empty result when no day overlaps: run the same
     // pipeline over one arbitrary day with an impossible time bound, so
     // callers keep the full samples-model columns (an AnalysisException on
     // a merely-empty interval would be wrong); a bucket with no days at
     // all yields the minimal bookkeeping schema
-    val dayDirs = if (inRange.nonEmpty) inRange else allDays.take(1)
+    val days = if (inRange.nonEmpty) inRange else allDays.take(1)
     val emptyRange = inRange.isEmpty
-    if (dayDirs.isEmpty)
+    if (days.isEmpty)
       return spark.range(0).select(col("id").as("series_hash"),
         col("id").as("ts_ms"), col("id").cast("double").as("value"),
         col("id").as("sample_id"))
@@ -590,7 +603,7 @@ object ReferenceFormat {
     // instead of vanishing from the frame and folding matchers to false
     val m = meta.getOrElse(bucketMeta(spark, dir))
     val lbl = spark.read.schema(m.labelsSchema)
-      .parquet(dayDirs.map(d => s"$d/*.labels.parquet"): _*)
+      .parquet(days.flatMap(_.labelsFiles): _*)
       .withColumn("_stem", regexp_replace(col("_metadata.file_path"),
         lit("\\.labels\\.parquet$"), lit("")))
       .withColumn("_ri", col("_metadata.row_index"))
@@ -608,10 +621,9 @@ object ReferenceFormat {
     // PromXorSpec "foreign boundary-spanning chunk"); own-writer buckets
     // cut chunks at window boundaries and are exact.
     val colMs = 8L * 3600000L
-    def cellRange(dayDir: String): (Int, Int) = {
+    def cellRange(d: Day): (Int, Int) = {
       if (emptyRange) return (0, 0)
-      val d = dayDir.substring(dayDir.lastIndexOf('/') + 1)
-      val dayStart = java.time.LocalDate.parse(d)
+      val dayStart = java.time.LocalDate.parse(d.date)
         .atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli
       val lo = if (mintMs <= dayStart) 0
                else math.min(((mintMs - dayStart) / colMs).toInt, 2)
@@ -619,9 +631,9 @@ object ReferenceFormat {
                else math.max(lo, math.min(((maxtMs - dayStart) / colMs).toInt, 2))
       (lo, hi)
     }
-    val chk = dayDirs.groupBy(cellRange).map { case ((cLo, cHi), dirs) =>
+    val chk = days.groupBy(cellRange).map { case ((cLo, cHi), ds) =>
       spark.read.schema(ChunksSchema)
-        .parquet(dirs.map(d => s"$d/*.chunks.parquet"): _*)
+        .parquet(ds.flatMap(_.chunksFiles): _*)
         .withColumn("_stem", regexp_replace(col("_metadata.file_path"),
           lit("\\.chunks\\.parquet$"), lit("")))
         .withColumn("_ri", col("_metadata.row_index"))
@@ -660,19 +672,43 @@ object ReferenceFormat {
     // decode (the native layout's ChunkFramePrune equivalence)
     val pts = explode(concat(
       ChunkCols.map(c => PromFramesDecode(col(c), mintMs, maxtMs)): _*))
-    val zipped = filtered.join(chk, Seq("_stem", "_ri"))
+    // days proven float-only read without `h`: the frame then has the
+    // float-only raw shape, and the engine compiles no histogram side
+    val hCols = if (days.forall(_.facts.floatOnly)) Nil else Seq(col("_p.h").as("h"))
+    // the labels side carries a name, so label introspection over this
+    // frame can read the in-range days' series without the chunk zip and
+    // decode ([[seriesSide]]); an empty interval reads a stand-in day, so
+    // it carries none
+    val zipped = (if (emptyRange) filtered else filtered.as(SeriesSide))
+      .join(chk, Seq("_stem", "_ri"))
     zipped
       .withColumn("_p", pts)
       .select((plainNames ++ extKeys).map(col) ++
         Seq(seriesHashOf(zipped, plainNames.map(c => (c, col(c)))).as("series_hash"),
-          col("_p.ts_ms").as("ts_ms"), col("_p.value").as("value"),
-          col("_p.h").as("h")): _*)
+          col("_p.ts_ms").as("ts_ms"), col("_p.value").as("value")) ++ hCols: _*)
       .filter(if (emptyRange) lit(false)
               else col("ts_ms").between(mintMs, maxtMs))
       // the layout stores ≤1 sample per (series, ts); ts doubles as the
       // deterministic ingest-order tie-break the model asks for
       .withColumn("sample_id", col("ts_ms"))
   }
+
+  /** Name of the labels side inside a [[selectReferenceStore]] frame. */
+  private val SeriesSide = "__graft_series"
+
+  /** The labels-file rows (label columns, matchers applied) of the days a
+    * [[selectReferenceStore]] frame reads: what label introspection needs,
+    * without the chunk zip and decode. Day granularity — the reference
+    * resolves label names and values from the in-range days' labels files
+    * the same way. None for any other frame, or one holding several. */
+  def seriesSide(samples: DataFrame): Option[DataFrame] =
+    samples.queryExecution.analyzed.collect {
+      case s: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
+        if s.alias == SeriesSide => s.child
+    } match {
+      case Seq(side) => Some(org.apache.spark.sql.graftshim.ofRows(samples.sparkSession, side))
+      case _ => None
+    }
 
   // ------------------------------------- label metadata over the bucket
   private def dayStr(ms: Long): String = {
@@ -687,10 +723,8 @@ object ReferenceFormat {
   private def inRangeLabelFiles(fs: FileSystem, dir: String,
                                 mintMs: Long, maxtMs: Long): Seq[String] = {
     val (loD, hiD) = (dayStr(mintMs), dayStr(maxtMs))
-    servableDayDirs(fs, dir)
-      .filter { d => val n = d.substring(d.lastIndexOf('/') + 1); n >= loD && n <= hiD }
-      .flatMap(d => fs.globStatus(new Path(s"$d/*.labels.parquet"))
-        .map(_.getPath.toString))
+    servableDays(fs, dir).filter(d => d.date >= loD && d.date <= hiD)
+      .flatMap(_.labelsFiles)
   }
 
   private def streamsInRange(spark: SparkSession, dir: String,
@@ -773,14 +807,27 @@ object ReferenceFormat {
     * flat listing. `meta`/`marked` honor BOTH the hash-0 top-level spot
     * (`MetaFileNameForBlock` elides the zero hash) and the `0/<date>/`
     * shard spot, exactly as [[blockVisible]]-era discovery did;
-    * `shardFiles` records that at least one object exists under
-    * `<hash>/<date>/` (serving needs the shard pair there);
+    * `labelsFiles`/`chunksFiles` are the shard file names under
+    * `<hash>/<date>/`, read as listed (no glob, no second listing);
     * `shardMarkerMtime` is the `deletion-marker.pb` modification time at
     * the shard spot only — the one the deleter ages against. */
   private case class DayFacts(meta: Boolean = false, marked: Boolean = false,
-                              shardFiles: Boolean = false,
                               shardMarkerMtime: Option[Long] = None,
-                              maxFileMtime: Long = 0L)
+                              maxFileMtime: Long = 0L,
+                              maxParquetMtime: Long = 0L,
+                              floatOnlyMtime: Option[Long] = None,
+                              labelsFiles: Vector[String] = Vector.empty,
+                              chunksFiles: Vector[String] = Vector.empty) {
+    /** The [[FloatOnlyMarker]] is present and no parquet file of the day is
+      * newer than it (its own `.crc` is not a parquet file). */
+    def floatOnly: Boolean = floatOnlyMtime.exists(_ >= maxParquetMtime)
+  }
+
+  /** A servable day directory and its facts. */
+  private final case class Day(path: String, date: String, facts: DayFacts) {
+    def labelsFiles: Seq[String] = facts.labelsFiles.sorted.map(f => s"$path/$f")
+    def chunksFiles: Seq[String] = facts.chunksFiles.sorted.map(f => s"$path/$f")
+  }
 
   /** Logical list RPCs issued by discovery since JVM start. Pinned by
     * EtlSpec: opening an N-day bucket must cost O(1) listings, not the
@@ -796,7 +843,7 @@ object ReferenceFormat {
     * Local-FS fast path (r21): `fs.listFiles(recursive)` produces
     * LocatedFileStatus, and Hadoop's local FS computes per-file block
     * locations — measured 5.7 ms/FILE, ~0.9 s for a 31-day bucket, paid 2×
-    * per store query (servableDayDirs + bucketMeta). A plain listStatus walk
+    * per store query (servableDays + bucketMeta). A plain listStatus walk
     * yields the same FileStatus facts in ~9 ms. Object-store schemes keep
     * the single flat LIST (a per-directory walk would multiply round
     * trips); either way this remains ONE logical discovery listing
@@ -833,13 +880,20 @@ object ReferenceFormat {
         case Array(hash, date, fname)
             if hash.nonEmpty && hash.forall(_.isDigit) && DateRe.matches(date) =>
           val m = st.getModificationTime
-          if (fname == "meta.pb")
-            upd(hash, date)(f => f.copy(meta = true, shardFiles = true,
-              maxFileMtime = math.max(f.maxFileMtime, m)))
-          else if (fname == DeletionMarkerName)
+          if (fname == DeletionMarkerName)
             upd(hash, date)(_.copy(marked = true, shardMarkerMtime = Some(m)))
-          else upd(hash, date)(f => f.copy(shardFiles = true,
-            maxFileMtime = math.max(f.maxFileMtime, m)))
+          else upd(hash, date) { f0 =>
+            val f = f0.copy(maxFileMtime = math.max(f0.maxFileMtime, m))
+            if (fname == "meta.pb") f.copy(meta = true)
+            else if (fname == FloatOnlyMarker) f.copy(floatOnlyMtime = Some(m))
+            else if (!fname.endsWith(".parquet")) f
+            else {
+              val p = f.copy(maxParquetMtime = math.max(f.maxParquetMtime, m))
+              if (fname.endsWith(".labels.parquet")) p.copy(labelsFiles = p.labelsFiles :+ fname)
+              else if (fname.endsWith(".chunks.parquet")) p.copy(chunksFiles = p.chunksFiles :+ fname)
+              else p
+            }
+          }
         case _ => ()
       }
     }
@@ -862,13 +916,16 @@ object ReferenceFormat {
 
   /** Day directories (`<dir>/<hash>/<date>`) that serving may read: the
     * shard files always live under the hash directory; visible iff meta
-    * present, unmarked, and the shard dir is non-empty. One flat listing,
+    * present, unmarked, and a labels file is there. One flat listing,
     * driver-side. */
-  private def servableDayDirs(fs: FileSystem, dir: String): Seq[String] =
-    scanCatalog(fs, dir).toSeq
-      .collect { case ((hash, date), f) if f.meta && !f.marked && f.shardFiles =>
-        s"$dir/$hash/$date" }
-      .sorted
+  private def servableDays(fs: FileSystem, dir: String): Seq[Day] =
+    servableDays(dir, scanCatalog(fs, dir))
+
+  private def servableDays(dir: String, catalog: Map[(String, String), DayFacts]): Seq[Day] =
+    catalog.toSeq
+      .collect { case ((hash, date), f) if f.meta && !f.marked && f.labelsFiles.nonEmpty =>
+        Day(s"$dir/$hash/$date", date, f) }
+      .sortBy(_.path)
 
   // -------------------------------------------------------------- retention
   /** `metapb.DeletionMark{reason = 1}` (ref proto/metapb/meta.proto). */

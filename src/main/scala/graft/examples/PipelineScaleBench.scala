@@ -200,11 +200,14 @@ object PipelineScaleBench {
     // count(), so those walls would measure the scan, not the operator.
     // The noop write computes every column of every row. Row counts for
     // assertions come from an untimed count() afterwards (per-query
-    // persists are still cached then; metrics are recorded before it).
+    // persists are still cached then); the returned shuffle and peak-task
+    // figures are snapshots taken before it, so bounds checked against
+    // them measure the noop write alone.
     // The r21-comparable phases above keep count() so their cross-round
     // rows stay like-for-like.
+    final case class NoopRun(rows: Long, shuffleWrite: Long, peakTaskRows: Long)
     def timedNoop(name: String, needRows: Boolean = false,
-                  maxResultMb: Double = 256.0)(df: => DataFrame): Long = {
+                  maxResultMb: Double = 256.0)(df: => DataFrame): NoopRun = {
       spark.catalog.clearCache()
       listener.reset()
       val t0 = System.nanoTime()
@@ -215,16 +218,17 @@ object PipelineScaleBench {
       val resMb = listener.resultBytes.get / 1e6
       if (resMb > maxResultMb)
         failures += f"$name: $resMb%.1f MB returned to the driver (cap $maxResultMb)"
+      val (shuf, peak) = (listener.shuffleWrite.get, listener.peakTaskRecords.get)
       results(name) = Map(
         "sec" -> math.rint(sec * 100) / 100,
         "shuffle_read_mb" -> math.rint(listener.shuffleRead.get / 1e4) / 100,
-        "shuffle_write_mb" -> math.rint(listener.shuffleWrite.get / 1e4) / 100,
-        "peak_task_rows" -> listener.peakTaskRecords.get,
+        "shuffle_write_mb" -> math.rint(shuf / 1e4) / 100,
+        "peak_task_rows" -> peak,
         "driver_result_mb" -> math.rint(resMb * 100) / 100)
       val rows = if (needRows) d.count() else -1L
       if (needRows) results(name) = results(name) + ("rows" -> rows)
       println(s"[pipescale] $name: ${results(name)}")
-      rows
+      NoopRun(rows, shuf, peak)
     }
 
     // ------------------------------------------------ registry entries
@@ -250,36 +254,37 @@ object PipelineScaleBench {
     // within a small multiple of the corpus bytes and that no task sees a
     // super-linear row count (skew canary).
     if (phase("tx_contamination")) {
-      val rows = timedNoop("tx_contamination", needRows = true)(q("tx_contamination", dirA))
+      val NoopRun(rows, shuf, _) =
+        timedNoop("tx_contamination", needRows = true)(q("tx_contamination", dirA))
       if (rows < nDocs / 1000)
         failures += s"tx_contamination missed planted contaminated docs: $rows"
-      val shuf = listener.shuffleWrite.get
       if (shuf > 16L * nDocs) // exploded train side would be ~1.5 KB/doc
         failures += s"tx_contamination shuffled the train corpus: $shuf B"
     }
     if (phase("tx_bloom_decontam")) {
-      val rows = timedNoop("tx_bloom_decontam", needRows = true)(q("tx_bloom_decontam", dirA))
+      val NoopRun(rows, shuf, _) =
+        timedNoop("tx_bloom_decontam", needRows = true)(q("tx_bloom_decontam", dirA))
       if (rows < nDocs / 2) // returns every train doc with its flag
         failures += s"tx_bloom_decontam lost train docs: $rows"
-      val shuf = listener.shuffleWrite.get
       if (shuf > 16L * nDocs)
         failures += s"tx_bloom_decontam shuffled past the bloom prefilter: $shuf B"
     }
     if (phase("dd_line_dedup")) {
-      val rows = timedNoop("dd_line_dedup", needRows = true)(q("dd_line_dedup", dirA))
+      val NoopRun(rows, shuf, peak) =
+        timedNoop("dd_line_dedup", needRows = true)(q("dd_line_dedup", dirA))
       if (rows != nDocs)
         failures += s"dd_line_dedup row count: $rows != $nDocs"
       val corpusBytes = 450L * nDocs // ~60 words × ~7 chars
-      if (listener.shuffleWrite.get > 8L * corpusBytes)
-        failures += s"dd_line_dedup shuffle super-linear: ${listener.shuffleWrite.get} B"
-      if (listener.peakTaskRecords.get > math.max(4L * 8 * nDocs / 32, 1L << 22))
-        failures += s"dd_line_dedup skewed task: ${listener.peakTaskRecords.get} rows"
+      if (shuf > 8L * corpusBytes)
+        failures += s"dd_line_dedup shuffle super-linear: $shuf B"
+      if (peak > math.max(4L * 8 * nDocs / 32, 1L << 22))
+        failures += s"dd_line_dedup skewed task: $peak rows"
     }
     if (phase("dd_ngram_jaccard")) {
-      timedNoop("dd_ngram_jaccard")(q("dd_ngram_jaccard", dirA))
+      val shuf = timedNoop("dd_ngram_jaccard")(q("dd_ngram_jaccard", dirA)).shuffleWrite
       val corpusBytes = 450L * nDocs
-      if (listener.shuffleWrite.get > 16L * corpusBytes)
-        failures += s"dd_ngram_jaccard shuffle super-linear: ${listener.shuffleWrite.get} B"
+      if (shuf > 16L * corpusBytes)
+        failures += s"dd_ngram_jaccard shuffle super-linear: $shuf B"
     }
     // per-task CPU probes for the codegen'd token counters (r21 #3): pure
     // map-side queries, so the noop wall IS the per-task expression cost.

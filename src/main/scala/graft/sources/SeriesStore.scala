@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.promql.{Eval, LabelMatcher}
+import graft.promql.{Eval, LabelMatcher, Matchers}
 
 /** One store behind every serving layout — the reference's storage-engine
   * contract, one operator set over one store: `Select` (`db/db.go`),
@@ -91,6 +91,12 @@ object SeriesStore {
   private[sources] def bounded[T](xs: Seq[T], limit: Int): Seq[T] =
     if (limit > 0) xs.take(limit + 1) else xs
 
+  /** Spark's string order: unsigned UTF-8 bytes, as Go compares strings. */
+  private[sources] val Utf8Order: Ordering[String] =
+    Ordering.by[String, org.apache.spark.unsafe.types.UTF8String](
+      org.apache.spark.unsafe.types.UTF8String.fromString)(
+      Ordering.comparatorToOrdering(java.util.Comparator.naturalOrder()))
+
   private def isDir(p: String): Boolean = Files.isDirectory(Paths.get(p))
 
   private def isReferenceBucket(p: String): Boolean = isDir(p) && {
@@ -118,7 +124,7 @@ object SeriesStore {
 final class FrameStore(samples: DataFrame,
                        byRange: Option[(Long, Long) => DataFrame] = None)
     extends SeriesStore {
-  import SeriesStore.bounded
+  import SeriesStore.{Utf8Order, bounded}
 
   /** The STRING columns minus the sample/meta payload — a native-histogram
     * column (h, struct) is a sample value, not a label. */
@@ -131,11 +137,20 @@ final class FrameStore(samples: DataFrame,
              matcherSets: Seq[Seq[LabelMatcher]]): DataFrame =
     byRange.fold(samples)(_(mintMs, maxtMs))
 
+  /** Rows of the series matching `matcherSets` with samples in the
+    * interval; introspection reads only their label columns. A
+    * reference-bucket frame answers from its in-range days' labels files
+    * instead, at day granularity ([[graft.etl.ReferenceFormat.seriesSide]]). */
   private def matching(matcherSets: Seq[Seq[LabelMatcher]],
                        mintMs: Long, maxtMs: Long): DataFrame = {
     val df = select(mintMs, maxtMs, matcherSets)
-    if (matcherSets.isEmpty) Eval.select(df, Nil, mintMs, maxtMs)
-    else Eval.selectUnion(df, matcherSets, mintMs, maxtMs)
+    graft.etl.ReferenceFormat.seriesSide(df) match {
+      case Some(series) if matcherSets.isEmpty => series
+      case Some(series) =>
+        series.filter(matcherSets.map(ms => Matchers.compile(series, ms)).reduce(_ || _))
+      case None if matcherSets.isEmpty => Eval.select(df, Nil, mintMs, maxtMs)
+      case None => Eval.selectUnion(df, matcherSets, mintMs, maxtMs)
+    }
   }
 
   /** Columns per `labelNames` count aggregate — large enough that any
@@ -184,8 +199,13 @@ final class FrameStore(samples: DataFrame,
       else None
     viaFooter.map(bounded(_, limit)).getOrElse {
       val vals = matching(matcherSets, mintMs, maxtMs)
-        .select(col(label)).na.drop().distinct().orderBy(col(label))
-      bounded(vals, limit).collect().map(_.getString(0)).toSeq
+        .select(col(label)).na.drop().distinct()
+      // unlimited: every value reaches the driver anyway, so sort there —
+      // a Spark orderBy would add a range-sampling job and a sort shuffle;
+      // limited: orderBy + limit plans as one take-ordered step
+      if (limit > 0)
+        bounded(vals.orderBy(col(label)), limit).collect().map(_.getString(0)).toSeq
+      else vals.collect().map(_.getString(0)).toSeq.sorted(Utf8Order)
     }
   }
 

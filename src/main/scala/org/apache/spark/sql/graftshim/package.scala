@@ -11,6 +11,10 @@ package object graftshim {
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** A DataFrame over an (analyzed) logical plan. */
+  def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
   /** Spark's own runtime-filter bloom aggregate (`private[sql]`), exposed for
     * corpus-hygiene prefilters: aggregates xxhash64-style Long hashes into a
     * serialized `BloomFilter` (binary). Mergeable map-side partials — the

@@ -629,6 +629,47 @@ class PromXorSpec extends SparkSpec {
       day + D, day + 2 * D - 1) == Seq("y"))
   }
 
+  test("engine label introspection off a reference bucket reads labels files, day-granular") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.promql.MatchEq
+    val day = 1704067200000L
+    val D = 86400000L
+    val df = Seq(
+      ("x", "a", "p", day + 1000L, 1.0),
+      ("x", "b", "q", day + 2000L, 2.0),
+      ("y", "a", null, day + D + 1000L, 3.0))
+      .toDF("__name__", "svc", "env", "ts_ms", "value")
+      .withColumn("sample_id", col("ts_ms"))
+      .withColumn("series_hash", xxhash64(col("__name__"), col("svc"), col("env")))
+    val out = java.nio.file.Files.createTempDirectory("graft-refintro").toString
+    ReferenceFormat.convertReference(spark, df, out, numShards = 1)
+    val store = graft.sources.SeriesStore.reference(spark, out)
+    val bucket = new graft.api.PromEngine(store)
+    val raw = new graft.api.PromEngine(new graft.sources.FrameStore(df))
+
+    // whole days: the same answers as the raw frame
+    val (lo, hi) = (day, day + 2 * D - 1)
+    val onX = Seq(MatchEq("__name__", "x"))
+    assert(bucket.labelNames(Nil, lo, hi) == raw.labelNames(Nil, lo, hi))
+    assert(bucket.labelNames(onX, lo, hi) == raw.labelNames(onX, lo, hi))
+    assert(bucket.labelValues("svc", onX, lo, hi) == raw.labelValues("svc", onX, lo, hi))
+    assert(bucket.labelValues("env", Nil, lo, hi, limit = 1) ==
+      raw.labelValues("env", Nil, lo, hi, limit = 1))
+    assert(bucket.series(Seq(onX), lo, hi) == raw.series(Seq(onX), lo, hi))
+
+    // day granularity, as the reference answers from the in-range days'
+    // labels files: y's day counts in a window holding none of its samples
+    val (wLo, wHi) = (day + D + 3600000L, day + D + 7200000L)
+    assert(bucket.labelValues("__name__", Nil, wLo, wHi)._1 == Seq("y"))
+    assert(raw.labelValues("__name__", Nil, wLo, wHi)._1.isEmpty)
+    // the series side reads labels files only; an empty interval has none
+    val side = ReferenceFormat.seriesSide(store.select(lo, hi))
+    assert(side.exists(_.inputFiles.forall(_.endsWith(".labels.parquet"))))
+    assert(ReferenceFormat.seriesSide(store.select(day + 9 * D, day + 10 * D)).isEmpty)
+    assert(bucket.labelValues("__name__", Nil, day + 9 * D, day + 10 * D)._1.isEmpty)
+  }
+
   test("bug-compatible: foreign boundary-spanning chunk invisible to cell-pruned reads") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -813,9 +854,10 @@ class PromXorSpec extends SparkSpec {
 
   test("classic-bucket histogram_quantile off a reference bucket matches the raw frame") {
     val t0 = histT0
-    // classic `le` buckets only: the bucket still carries the native `h`
-    // column (all null), which must not trip the native quantile's
-    // bucket walk over empty arrays
+    // classic `le` buckets only: the float-only bucket serves without `h`;
+    // without its markers (a foreign bucket) it carries `h` all null,
+    // which must not trip the native quantile's bucket walk over empty
+    // arrays
     val samples = classicBucketSamples()
     val out = java.nio.file.Files.createTempDirectory("graft-refclassic").toString
     ReferenceFormat.convertReference(spark, samples, out, numShards = 2)
@@ -831,6 +873,8 @@ class PromXorSpec extends SparkSpec {
     assert(norm(engBucket.instantQuery(q, ti)) == want)
     assert(norm(engBucket.rangeQuery(q, ti, end, 600000L)) ==
       norm(engRaw.rangeQuery(q, ti, end, 600000L)))
+    dropFloatOnlyMarkers(out)
+    assert(norm(engBucket.instantQuery(q, ti)) == want)
   }
 
   test("native and classic histograms in one reference bucket: each quantile takes its own path") {
@@ -856,6 +900,122 @@ class PromXorSpec extends SparkSpec {
     sameSeries(q, engBucket.instantQuery(q, tc), engClassic.instantQuery(q, tc))
     sameSeries(q, engBucket.rangeQuery(q, tc, end, 600000L),
       engClassic.rangeQuery(q, tc, end, 600000L))
+  }
+
+  /** Float counter `x{l}`, two series per minute over the first 4 h of the
+    * histogram fixture's day: no `h` column, the float-only raw shape. */
+  private def floatSamples(): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val rows = for { l <- Seq("a", "b"); k <- 0 until 240 } yield (l, k)
+    rows.toDF("l", "k")
+      .select(lit("x").as("__name__"), col("l"),
+        (lit(histT0) + col("k") * lit(60000L)).as("ts_ms"),
+        (col("k") * when(col("l") === "a", 1.5).otherwise(2.0) + 1.0).as("value"))
+      .withColumn("sample_id", col("ts_ms"))
+      .withColumn("series_hash", xxhash64(col("__name__"), col("l")))
+  }
+
+  private def markerOf(out: String, date: String): java.nio.file.Path =
+    java.nio.file.Paths.get(s"$out/0/$date/${ReferenceFormat.FloatOnlyMarker}")
+
+  /** A bucket as older code or the Go converter leaves it: no markers. */
+  private def dropFloatOnlyMarkers(out: String): Unit = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(out))
+    try s.iterator().asInstanceOf[java.util.Iterator[java.nio.file.Path]].forEachRemaining { p =>
+      if (p.getFileName.toString.contains(ReferenceFormat.FloatOnlyMarker))
+        java.nio.file.Files.delete(p)
+    } finally s.close()
+  }
+
+  test("float-only marker: written per float day, dropped by a histogram re-convert or a newer parquet") {
+    import org.apache.spark.sql.functions._
+    import java.nio.file.Files
+    val D = 86400000L
+    val (d1, d2) = ("2024-01-01", "2024-01-02")
+    val hist2 = nativeHistSamples().withColumn("ts_ms", col("ts_ms") + D)
+      .withColumn("sample_id", col("ts_ms"))
+    val out = Files.createTempDirectory("graft-reffloat").toString
+    ReferenceFormat.convertReference(spark,
+      floatSamples().unionByName(hist2, allowMissingColumns = true), out)
+    assert(Files.size(markerOf(out, d1)) == 0 && !Files.exists(markerOf(out, d2)))
+    def hasH(lo: Long, hi: Long): Boolean =
+      ReferenceFormat.selectReferenceStore(spark, out, Nil, lo, hi).columns.contains("h")
+    val (day1, day2) = ((histT0, histT0 + D - 1), (histT0 + D, histT0 + 2 * D - 1))
+    assert(!hasH(day1._1, day1._2), "a float-only day reads without h")
+    assert(hasH(day2._1, day2._2), "a histogram day keeps h")
+    assert(hasH(day1._1, day2._2), "a range spanning both kinds keeps h")
+
+    // a parquet file newer than the marker (a foreign upload into the day)
+    // demotes it; one no newer than it leaves the proof standing
+    val stamp = Files.getLastModifiedTime(markerOf(out, d1)).toMillis
+    val chunks = java.nio.file.Paths.get(s"$out/0/$d1/0.chunks.parquet")
+    Files.setLastModifiedTime(chunks, java.nio.file.attribute.FileTime.fromMillis(stamp + 60000L))
+    assert(hasH(day1._1, day1._2))
+    Files.setLastModifiedTime(chunks, java.nio.file.attribute.FileTime.fromMillis(stamp))
+    assert(!hasH(day1._1, day1._2))
+
+    // re-converting the float day with histogram samples removes its marker
+    ReferenceFormat.convertReference(spark, nativeHistSamples(), out, days = Some(Seq(d1)))
+    assert(!Files.exists(markerOf(out, d1)) && hasH(day1._1, day1._2))
+  }
+
+  test("float-only bucket: plain float plan, raw-frame answers, no FileStreamSink warnings") {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.{Intersect, Join}
+    import graft.promql.{Compiler, Parser}
+    val samples = floatSamples()
+    val out = java.nio.file.Files.createTempDirectory("graft-reffloatq").toString
+    ReferenceFormat.convertReference(spark, samples, out)
+    val store = graft.sources.SeriesStore.reference(spark, out)
+    val engBucket = new graft.api.PromEngine(store, lookbackMs = 3600000L)
+    val engRaw = new graft.api.PromEngine(new graft.sources.FrameStore(samples), lookbackMs = 3600000L)
+    val ti = histT0 + 3 * 3600000L
+    val rate = "sum by (l) (rate(x[5m]))"
+
+    // every WARN of Spark's FileStreamSink metadata probe while querying
+    val sinkWarnings = new java.util.concurrent.atomic.AtomicInteger
+    val appender = new AbstractAppender("sink-warnings", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.endsWith("FileStreamSink") && e.getLevel == Level.WARN)
+          sinkWarnings.incrementAndGet()
+    }
+    appender.start()
+    val logCtx = org.apache.logging.log4j.LogManager.getContext(false).asInstanceOf[LoggerContext]
+    logCtx.getConfiguration.getRootLogger.addAppender(appender, Level.WARN, null)
+    logCtx.updateLoggers()
+    try {
+      for (q <- Seq("avg(x)", rate, "x"))
+        sameSeries(q, engBucket.instantQuery(q, ti), engRaw.instantQuery(q, ti))
+    } finally {
+      logCtx.getConfiguration.getRootLogger.removeAppender("sink-warnings")
+      logCtx.updateLoggers()
+      appender.stop()
+    }
+    assert(sinkWarnings.get == 0, "bucket reads must name files, not globs")
+
+    // the served plan is the plain float one: no histogram side, no
+    // mixed-type intersect, no anti-joins
+    val ast = Parser.parse(rate)
+    val (lo, hi) = Compiler.timeBounds(ast, ti, ti, 3600000L)
+    val (df, mixed) = Compiler.compileServingAnnotated(ast, Compiler.Ctx(
+      store.select(lo, hi, Compiler.selectorMatcherSets(ast)), ti, ti, 1000L, 3600000L))
+    // (the optimizer rewrites an Intersect into a semi join, so look for
+    // it before optimization)
+    val qe = df.queryExecution
+    assert(qe.analyzed.collect { case i: Intersect => i }.isEmpty, qe.analyzed.toString)
+    assert(qe.optimizedPlan.collect { case j: Join if j.joinType == LeftAnti => j }.isEmpty,
+      qe.optimizedPlan.toString)
+    assert(mixed.isEmpty)
+
+    // without markers (older code, the Go converter) the bucket keeps h;
+    // the classic-bucket test above checks answers in that shape
+    dropFloatOnlyMarkers(out)
+    assert(store.select(lo, hi).columns.contains("h"))
   }
 
   test("mixed V1/V2 shards in one bucket: one series identity at query granularity") {
