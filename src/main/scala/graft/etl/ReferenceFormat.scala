@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{PromFrameCols, PromFramesDecode, PromLabelIndex, PromLabelsHash, PromXorChunk}
+import graft.functions.{PromFrameCols, PromFramesDecode, PromLabelIndex, PromLabelsHash}
 
 /** Byte-level interop with the reference's on-disk bucket layout — the
   * dual-file `labels.parquet`/`chunks.parquet` pair the Go converter writes
@@ -37,6 +37,11 @@ import graft.functions.{PromFrameCols, PromFramesDecode, PromLabelIndex, PromLab
   * SAME rows in the SAME order — the reference zips them positionally, so
   * both sinks here shuffle and sort by one total key and the reader joins on
   * `(file stem, _metadata.row_index)`.
+  *
+  * A bucket is read one way: [[selectReferenceStore]] (day- and
+  * cell-pruned, matchers on the labels side). Label introspection reads
+  * the labels side of that same frame ([[seriesSide]]), so it never opens
+  * a chunks file; [[graft.sources.SeriesStore.reference]] wraps both.
   *
   * Scale design: the per-(series, day) chunk build is a grouping aggregate
   * (map-side partials, executor-side encode — nothing uncompressed crosses
@@ -427,71 +432,6 @@ object ReferenceFormat {
   }
 
   // -------------------------------------------------------------------- read
-  /** Open a reference-layout bucket as flat samples: label columns (prefix
-    * stripped) + `series_hash` (= ___cf_meta_hash) + ts_ms/value + `date`.
-    * Labels and chunks zip on `(file stem, _metadata.row_index)` — the
-    * positional correspondence the dual-file writer guarantees; stream.pb
-    * external labels fold in as constant columns (file label wins on
-    * collision, the P10 precedence). */
-  def openReferenceStore(spark: SparkSession, dir: String): DataFrame = {
-    // discovery hygiene: only meta-complete, unmarked days are readable —
-    // a half-written day (crashed converter) or a deletion-marked day is
-    // invisible, as in the reference's Discoverer
-    val fs = FileSystem.get(new Path(dir).toUri, spark.sparkContext.hadoopConfiguration)
-    val days = servableDays(fs, dir)
-    // mergeSchema: per-shard schemas are data-driven in real buckets
-    // (schema/schema.go:82-97) — a label present only in some shards must
-    // read as null elsewhere, not vanish with a sampled-file schema
-    val lbl = spark.read.option("mergeSchema", "true")
-      .parquet(days.flatMap(_.labelsFiles): _*)
-      .withColumn("_stem", regexp_replace(col("_metadata.file_path"),
-        lit("\\.labels\\.parquet$"), lit("")))
-      .withColumn("_ri", col("_metadata.row_index"))
-    val chk = chunksProjection(spark.read.schema(ChunksSchema)
-      .parquet(days.flatMap(_.chunksFiles): _*)
-      .withColumn("_stem", regexp_replace(col("_metadata.file_path"),
-        lit("\\.chunks\\.parquet$"), lit("")))
-      .withColumn("_ri", col("_metadata.row_index")))
-
-    val lblNames = lbl.columns.filter(_.startsWith(LabelPrefix)).toSeq.sorted
-    val joined = lbl.join(chk, Seq("_stem", "_ri"))
-
-    val pts = explode(concat(ChunkCols.map(c => PromFramesDecode(col(c))): _*))
-    val streams = readStreamDescriptors(spark, dir)
-    val extKeys = streams.values.flatMap(_.keys).toSeq.distinct.sorted
-      .filterNot(k => lblNames.contains(LabelPrefix + k))
-    // bounded driver-side sidecar fold: stream hash (path segment) → labels
-    val extCols = extKeys.map { k =>
-      val byHash = streams.collect { case (h, m) if m.contains(k) => (h, m(k)) }.toSeq
-      byHash.foldLeft(lit(null).cast("string")) { case (acc, (h, v)) =>
-        when(element_at(split(col("_stem"), "/"), -3) === h, lit(v)).otherwise(acc)
-      }.as(k)
-    }
-
-    joined
-      .withColumn("_p", pts)
-      .select(lblNames.map(c => col(c).as(c.stripPrefix(LabelPrefix))) ++ extCols ++
-        Seq(seriesHashOf(joined, lblNames.map(c => (c.stripPrefix(LabelPrefix), col(c)))).as("series_hash"),
-          col("_p.ts_ms").as("ts_ms"), col("_p.value").as("value"),
-          col("_p.h").as("h"),
-          // the layout stores ≤1 sample per (series, ts) — vertical-merge
-          // dedup collapsed ties at convert — so ts_ms is a valid ingest
-          // tie-break, and the samples-model contract (PromEngine's range
-          // functions order on it) holds over an opened bucket
-          col("_p.ts_ms").as("sample_id"),
-          element_at(split(col("_stem"), "/"), -2).as("date")): _*)
-  }
-
-  /** Chunks-file projection tolerant of schema V1 (pre-`___cf_meta_hash`,
-    * ref `schema/schema.go:38-49`): a missing hash column reads as null and
-    * [[seriesHashOf]] recomputes it from the labels. */
-  private def chunksProjection(chkRaw: DataFrame): DataFrame = {
-    val hashC = if (chkRaw.columns.contains(HashCol)) col(HashCol)
-                else lit(null).cast("long").as(HashCol)
-    chkRaw.select(Seq(col("_stem"), col("_ri"), hashC.as(HashCol)) ++
-      ChunkCols.map(c => coalesce(col(c), lit(Array.empty[Byte])).as(c)): _*)
-  }
-
   /** `___cf_meta_hash` when stored (V2), else Prometheus labels.Hash
     * recomputed over the present labels — identical bytes-in, so V1 and V2
     * rows of the same series carry one hash. */
@@ -710,95 +650,13 @@ object ReferenceFormat {
       case _ => None
     }
 
-  // ------------------------------------- label metadata over the bucket
+  // ------------------------------------------------------------ catalog
+  /** The UTC day (`YYYY-MM-DD`, a bucket's day-directory name) holding
+    * `ms`, clamped to the years 1970–9999. */
   private def dayStr(ms: Long): String = {
     val cap = 253402214400000L
     java.time.Instant.ofEpochMilli(ms.max(0L).min(cap))
       .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
-  }
-
-  /** labels files of the servable days overlapping [mintMs, maxtMs] —
-    * day-directory granularity, which IS the block granularity the
-    * reference's no-constraint shortcuts work at. */
-  private def inRangeLabelFiles(fs: FileSystem, dir: String,
-                                mintMs: Long, maxtMs: Long): Seq[String] = {
-    val (loD, hiD) = (dayStr(mintMs), dayStr(maxtMs))
-    servableDays(fs, dir).filter(d => d.date >= loD && d.date <= hiD)
-      .flatMap(_.labelsFiles)
-  }
-
-  private def streamsInRange(spark: SparkSession, dir: String,
-                             mintMs: Long, maxtMs: Long): Map[String, Map[String, String]] = {
-    val (loD, hiD) = (dayStr(mintMs), dayStr(maxtMs))
-    val hashes = discoverDays(spark, dir).collect {
-      case (h, ds) if ds.exists(d => d >= loD && d <= hiD) => h
-    }.toSet
-    readStreamDescriptors(spark, dir).filter { case (h, _) => hashes(h) }
-  }
-
-  /** Matcherless `label_values(label)` over a reference bucket — the
-    * reference's no-constraint dictionary shortcut (`search/search.go:
-    * 173-201`: with no constraints, values come from the parquet DICTIONARY
-    * pages of the labels files, never a data page and never a chunks file).
-    * Block(= day-dir)-granular like the reference: a value is reported when
-    * its series exists in ANY overlapping day. Files whose label chunk is
-    * not dictionary-complete fall back to a pruned single-column scan —
-    * still labels-files-only. External (stream.pb) label values of streams
-    * with an in-range day union in, as the gateway's fold attaches them. */
-  def referenceLabelValues(spark: SparkSession, dir: String, label: String,
-                           mintMs: Long = Long.MinValue,
-                           maxtMs: Long = Long.MaxValue): Seq[String] = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val fs = FileSystem.get(new Path(dir).toUri, spark.sparkContext.hadoopConfiguration)
-    val files = inRangeLabelFiles(fs, dir, mintMs, maxtMs)
-    val colName = LabelPrefix + label
-    val oneCol = StructType(Seq(StructField(colName, StringType)))
-    def scan(fsq: Seq[String]): Seq[String] =
-      if (fsq.isEmpty) Nil
-      else spark.read.schema(oneCol).parquet(fsq: _*)
-        .select(col(colName)).na.drop().distinct()
-        .collect().map(_.getString(0)).toSeq
-    val fromFiles: Seq[String] =
-      graft.sources.FooterLabelValues.fileDictValues(spark, files, colName) match {
-        case Some((dictVals, scanFiles)) => dictVals.toSeq ++ scan(scanFiles)
-        case None                        => scan(files)
-      }
-    val extVals = streamsInRange(spark, dir, mintMs, maxtMs).values
-      .flatMap(_.get(label))
-    (fromFiles ++ extVals).filter(v => v != null && v.nonEmpty).distinct.sorted
-  }
-
-  /** Matcherless `label_names()` over a reference bucket: candidates come
-    * from the bucket-meta sidecar (or footer union), presence is PROVEN
-    * from footer null counts alone (`valueCount − numNulls > 0`), files
-    * without usable stats fall back to a count scan of the remaining
-    * candidates — labels files only, chunks never touched. Stream ext-label
-    * keys of in-range streams union in. */
-  def referenceLabelNames(spark: SparkSession, dir: String,
-                          mintMs: Long = Long.MinValue,
-                          maxtMs: Long = Long.MaxValue): Seq[String] = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val fs = FileSystem.get(new Path(dir).toUri, spark.sparkContext.hadoopConfiguration)
-    val files = inRangeLabelFiles(fs, dir, mintMs, maxtMs)
-    val candidates = bucketMeta(spark, dir).labelsSchema.fieldNames
-      .filter(_.startsWith(LabelPrefix)).toSeq
-    val (proven, scanFiles) =
-      graft.sources.FooterLabelValues.filePresence(spark, files, candidates)
-    val remaining = candidates.filterNot(proven)
-    val scanned: Set[String] =
-      if (remaining.isEmpty || scanFiles.isEmpty) Set.empty
-      else {
-        val schema = StructType(remaining.map(c => StructField(c, StringType)))
-        val counts = spark.read.schema(schema).parquet(scanFiles: _*)
-          .agg(count(col(remaining.head)).as(remaining.head),
-            remaining.tail.map(l => count(col(l)).as(l)): _*).head()
-        remaining.filter(l => counts.getAs[Long](l) > 0).toSet
-      }
-    val fileNames = candidates.filter(l => proven(l) || scanned(l))
-      .map(_.stripPrefix(LabelPrefix))
-    val extNames = streamsInRange(spark, dir, mintMs, maxtMs).values
-      .flatMap(_.keys)
-    (fileNames ++ extNames).distinct.sorted
   }
 
   private val DateRe = "\\d{4}-\\d{2}-\\d{2}".r

@@ -109,6 +109,15 @@ object Tsdb {
   private val openBuckets = new java.util.concurrent.ConcurrentHashMap[
     String, graft.sources.TsdbBlockReader.OpenTsdbBucket]()
 
+  /** The shared TSDB-block fixture opened for serving, once per JVM. */
+  private def openFixtureBucket(t: Tables) = {
+    val dir = tsdbBlockFixture(t)
+    val (root, ulid) = (dir.substring(0, dir.lastIndexOf('/')),
+      dir.substring(dir.lastIndexOf('/') + 1))
+    openBuckets.computeIfAbsent(dir, _ =>
+      graft.sources.TsdbBlockReader.openBucket(t.spark, root, Seq(ulid)))
+  }
+
   /** The shared TSDB-block fixture (3-day dedup slice written as a real
     * index-v2 block); returns the block directory. The WRITER is the
     * documented driver-side seam — it bounds what it hands the driver —
@@ -240,17 +249,11 @@ object Tsdb {
     // bounded in SQL, so a refs-bound slip (off-by-one day edges, lost
     // chunk pruning) hash-mismatches.
     Q("s1_tsdb_open",
-      t => {
-        val dir = tsdbBlockFixture(t)
-        val (root, ulid) = (dir.substring(0, dir.lastIndexOf('/')),
-          dir.substring(dir.lastIndexOf('/') + 1))
-        openBuckets.computeIfAbsent(dir, _ =>
-          graft.sources.TsdbBlockReader.openBucket(t.spark, root, Seq(ulid)))
-          .select(T0 + DAY, T0 + 2 * DAY - 1)
-          .groupBy(col("__name__"))
-          .agg(count(lit(1)).as("n"), Det.dsum(col("value")).as("sum_v"))
-          .orderBy(col("__name__"))
-      },
+      t => openFixtureBucket(t)
+        .select(T0 + DAY, T0 + 2 * DAY - 1)
+        .groupBy(col("__name__"))
+        .agg(count(lit(1)).as("n"), Det.dsum(col("value")).as("sum_v"))
+        .orderBy(col("__name__")),
       Some(s"WITH $S_CTE, d AS (SELECT __name__, uid, ts_ms, " +
         s"min_by(value, sample_id) AS value FROM s WHERE ts_ms < ${T0 + 3 * DAY} " +
         "GROUP BY 1, 2, 3) " +
@@ -615,27 +618,23 @@ object Tsdb {
         "UNION ALL SELECT 'uid', count(user_id) FROM events WHERE user_id = 3) t " +
         "WHERE c > 0 ORDER BY label")),
 
-    // label_values over a RAW TSDB block via the index's label-index
-    // section alone (the per-label value dictionary): one small positional
-    // read per block — TOC + label offset table + one label-index section
-    // + symbols — never a series entry, never the whole index file. The
-    // raw-bucket twin of the reference's parquet dictionary shortcut.
+    // label_values over a RAW TSDB block through the serving store: the
+    // same OPEN bucket as s1_tsdb_open answers off its cached refs alone —
+    // no chunk and no index I/O per call. Oracle = distinct uid of the
+    // block's 3-day slice, so a lost or duplicated series hash-mismatches.
     Q("a3_tsdb_label_values",
       t => {
         import t.spark.implicits._
-        graft.sources.TsdbBlockReader
-          .labelValues(t.spark, Seq(tsdbBlockFixture(t)), "uid")
-          .toDF("uid").orderBy(col("uid"))
+        openFixtureBucket(t).labelValues("uid").toDF("uid").orderBy(col("uid"))
       },
       Some(s"WITH $S_CTE SELECT DISTINCT uid FROM s " +
         s"WHERE ts_ms < ${T0 + 3 * DAY} ORDER BY uid")),
 
-    // label_values over a REFERENCE bucket via the no-constraint dictionary
-    // shortcut (search/search.go:173-201): values come from the labels
-    // files' parquet dictionary pages — chunks files are never opened
+    // label_values over a REFERENCE bucket through the serving store: the
+    // in-range days' labels files answer, day-granular like the reference
+    // (search/search.go:173-201) — chunks files are never opened
     // (PromXorSpec pins that by deleting them). Oracle = distinct uid of
-    // the raw table, so a dictionary slip, day-pruning slip or lost scan
-    // fallback hash-mismatches.
+    // the raw table, so a day-pruning slip or a lost shard hash-mismatches.
     Q("a3_reference_label_values",
       t => {
         import t.spark.implicits._
@@ -646,8 +645,8 @@ object Tsdb {
           graft.etl.ReferenceFormat.convertReference(t.spark,
             TimeSeriesModel.samples(t.events), d, numShards = 2)
         }
-        graft.etl.ReferenceFormat
-          .referenceLabelValues(t.spark, out, "uid", T0, T0 + 31 * DAY)
+        graft.sources.SeriesStore.reference(t.spark, out)
+          .labelValues("uid", Nil, T0, T0 + 31 * DAY)
           .toDF("uid").orderBy(col("uid"))
       },
       Some("SELECT DISTINCT CAST(user_id AS VARCHAR) AS uid FROM events ORDER BY uid")),
@@ -770,18 +769,20 @@ object Tsdb {
     // Byte-level reference interop under the gate: write the reference's
     // EXACT dual-file labels.parquet/chunks.parquet layout (___cf_meta_index
     // varints, Prometheus labels.Hash, 3×8h framed XOR chunk columns,
-    // meta.pb) across 2 shards, then open it back through the positional
-    // labels↔chunks zip and hash-match the flat samples — proves a user
-    // with an existing thanos-parquet-gateway bucket can point this engine
-    // at it (and vice versa).
+    // meta.pb) across 2 shards, then read it back through the serving
+    // select (positional labels↔chunks zip) and hash-match the flat samples
+    // per UTC day of ts_ms — proves a user with an existing
+    // thanos-parquet-gateway bucket can point this engine at it (and vice
+    // versa).
     Q("s5_reference_layout",
       t => {
         val out = FixtureCache.dir(t.dir, "ref2shard") { d =>
           graft.etl.ReferenceFormat.convertReference(t.spark,
             TimeSeriesModel.samples(t.events), d, numShards = 2)
         }
-        graft.etl.ReferenceFormat.openReferenceStore(t.spark, out)
-          .groupBy(col("date"))
+        graft.etl.ReferenceFormat.selectReferenceStore(t.spark, out)
+          .groupBy(date_from_unix_date(floor(col("ts_ms") / DAY).cast("int"))
+            .cast("string").as("date"))
           .agg(count(lit(1)).as("n"), Det.dsum(col("value")).as("sum_v"),
             count_distinct(col("series_hash")).as("n_series"))
           .orderBy(col("date"))

@@ -30,7 +30,10 @@ import org.apache.spark.sql.functions.col
   * Applicability is conservative: the samples view must be a single plain
   * parquet relation (no decode-on-read transforms) and the label a string
   * column stored in the files (not a partition directory column); anything
-  * else returns None and the caller keeps its scan path.
+  * else returns None and the caller keeps its scan path. In practice that
+  * is the flat samples layout: a reference bucket's frame is a labels ↔
+  * chunks join, and its label questions go to the bucket's labels side
+  * instead ([[graft.etl.ReferenceFormat.seriesSide]]).
   */
 object FooterLabelValues {
 
@@ -177,113 +180,6 @@ object FooterLabelValues {
         }
       }
     }
-  }
-
-  // ------------------------------------------------ whole-file variants
-  // (no ts gating: callers prune at FILE granularity — the reference
-  // bucket's `<hash>/<date>/` day dirs are the block granularity the
-  // reference's own shortcut works at, search/search.go:173-201)
-
-  /** Dictionary values of `column` across whole files: Some((dictionary
-    * values, files needing a column scan)); None when the column exists
-    * with a non-string type somewhere (fast path off). A file without the
-    * column contributes nothing — its rows don't carry the label. */
-  private[graft] def fileDictValues(spark: org.apache.spark.sql.SparkSession,
-                                    files: Seq[String], column: String)
-      : Option[(Set[String], Seq[String])] = {
-    if (files.isEmpty) return Some((Set.empty, Nil))
-    val par = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-    val bc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
-    val classified = spark.sparkContext.parallelize(files, par)
-      .mapPartitions(it => it.map(f => classifyWhole(f, column, bc.value.value)))
-      .collect()
-    if (classified.exists(_ == null)) None
-    else Some((classified.iterator.flatMap(_.values).toSet,
-      classified.filter(_.needsScan).map(_.path).toSeq))
-  }
-
-  private def classifyWhole(path: String, column: String,
-                            conf: org.apache.hadoop.conf.Configuration): FileValues = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf))
-    try {
-      val schema = reader.getFooter.getFileMetaData.getSchema
-      val desc = schema.getColumns.asScala
-        .find(d => d.getPath.toSeq == Seq(column)).orNull
-      if (desc == null) return FileValues(path, Nil, needsScan = false)
-      if (desc.getPrimitiveType.getPrimitiveTypeName != PrimitiveTypeName.BINARY)
-        return null
-      var needsScan = false
-      val out = Seq.newBuilder[String]
-      reader.getFooter.getBlocks.asScala.foreach { bm =>
-        val cc = bm.getColumns.asScala.find(_.getPath.toDotString == column).orNull
-        val es = if (cc == null) null else cc.getEncodingStats
-        if (cc == null || es == null || es.hasNonDictionaryEncodedPages)
-          needsScan = true
-        else {
-          val dicts: org.apache.parquet.column.page.DictionaryPageReadStore =
-            reader.getDictionaryReader(bm)
-          val page = dicts.readDictionaryPage(desc)
-          if (page == null) needsScan = true
-          else {
-            val dict = page.getEncoding.initDictionary(desc, page)
-            var id = 0
-            while (id <= dict.getMaxId) {
-              out += dict.decodeToBinary(id).toStringUsingUTF8
-              id += 1
-            }
-          }
-        }
-      }
-      FileValues(path, out.result().distinct, needsScan)
-    } finally reader.close()
-  }
-
-  /** Whole-file presence proof: which of `columns` provably carry a
-    * non-null value somewhere in these files (footer null counts alone),
-    * plus the files whose footers can't prove/deny and need a count scan. */
-  private[graft] def filePresence(spark: org.apache.spark.sql.SparkSession,
-                                  files: Seq[String], columns: Seq[String])
-      : (Set[String], Seq[String]) = {
-    if (files.isEmpty || columns.isEmpty) return (Set.empty, Nil)
-    val par = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-    val bc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
-    val cols = columns.toArray
-    val classified = spark.sparkContext.parallelize(files, par)
-      .mapPartitions(it => it.map { f =>
-        import scala.jdk.CollectionConverters._
-        import org.apache.parquet.hadoop.ParquetFileReader
-        import org.apache.parquet.hadoop.util.HadoopInputFile
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), bc.value.value))
-        try {
-          val present = scala.collection.mutable.Set.empty[String]
-          var needsScan = false
-          reader.getFooter.getBlocks.asScala.foreach { bm =>
-            val byPath = bm.getColumns.asScala.map(c => c.getPath.toDotString -> c).toMap
-            cols.foreach { l =>
-              byPath.get(l).foreach { cc =>
-                val ls = cc.getStatistics
-                if (ls != null && ls.isNumNullsSet) {
-                  if (cc.getValueCount - ls.getNumNulls > 0) present += l
-                } else needsScan = true
-              }
-            }
-          }
-          FileNames(f, present.toSeq, needsScan)
-        } finally reader.close()
-      })
-      .collect()
-    (classified.iterator.flatMap(_.present).toSet,
-      classified.filter(_.needsScan).map(_.path).toSeq)
   }
 
   private final case class FileNames(path: String, present: Seq[String],

@@ -137,20 +137,29 @@ final class FrameStore(samples: DataFrame,
              matcherSets: Seq[Seq[LabelMatcher]]): DataFrame =
     byRange.fold(samples)(_(mintMs, maxtMs))
 
-  /** Rows of the series matching `matcherSets` with samples in the
-    * interval; introspection reads only their label columns. A
-    * reference-bucket frame answers from its in-range days' labels files
-    * instead, at day granularity ([[graft.etl.ReferenceFormat.seriesSide]]). */
-  private def matching(matcherSets: Seq[Seq[LabelMatcher]],
-                       mintMs: Long, maxtMs: Long): DataFrame = {
-    val df = select(mintMs, maxtMs, matcherSets)
-    graft.etl.ReferenceFormat.seriesSide(df) match {
-      case Some(series) if matcherSets.isEmpty => series
-      case Some(series) =>
-        series.filter(matcherSets.map(ms => Matchers.compile(series, ms)).reduce(_ || _))
-      case None if matcherSets.isEmpty => Eval.select(df, Nil, mintMs, maxtMs)
-      case None => Eval.selectUnion(df, matcherSets, mintMs, maxtMs)
-    }
+  /** One interval's select frame, built once per label call, and the
+    * labels side it carries if it reads a reference bucket. */
+  private final class Interval(mintMs: Long, maxtMs: Long) {
+    val frame: DataFrame = select(mintMs, maxtMs, Nil)
+    val seriesSide: Option[DataFrame] = graft.etl.ReferenceFormat.seriesSide(frame)
+
+    /** The footer shortcut needs a bare parquet relation; a frame with a
+      * labels side is a join, so it is not tried there. */
+    def footerApplies(matcherSets: Seq[Seq[LabelMatcher]]): Boolean =
+      matcherSets.isEmpty && seriesSide.isEmpty
+
+    /** Rows of the series matching `matcherSets` with samples in the
+      * interval; introspection reads only their label columns. A
+      * reference-bucket frame answers from its in-range days' labels files
+      * instead, at day granularity. */
+    def matching(matcherSets: Seq[Seq[LabelMatcher]]): DataFrame =
+      seriesSide match {
+        case Some(series) if matcherSets.isEmpty => series
+        case Some(series) =>
+          series.filter(matcherSets.map(ms => Matchers.compile(series, ms)).reduce(_ || _))
+        case None if matcherSets.isEmpty => Eval.select(frame, Nil, mintMs, maxtMs)
+        case None => Eval.selectUnion(frame, matcherSets, mintMs, maxtMs)
+      }
   }
 
   /** Columns per `labelNames` count aggregate — large enough that any
@@ -161,18 +170,19 @@ final class FrameStore(samples: DataFrame,
   def labelNames(matcherSets: Seq[Seq[LabelMatcher]], mintMs: Long, maxtMs: Long,
                  limit: Int): Seq[String] = {
     val lbls = labelColumns
+    val in = new Interval(mintMs, maxtMs)
     // footer fast path first (matcherless only): per-row-group statistics
     // prove which labels actually carry values INSIDE the interval (the
     // reference reads per-block schemas within range, search/search.go:294).
-    // Non-file-backed views (decode-on-read stores, bounded bucket frames)
-    // fall through to the count scan — the answer must stay DATA-driven: a
-    // label column existing in the schema is not a label present in range.
+    // Non-file-backed views (decode-on-read stores) fall through to the
+    // count scan — the answer must stay DATA-driven: a label column
+    // existing in the schema is not a label present in range.
     val viaFooter =
-      if (matcherSets.isEmpty)
-        FooterLabelValues.labelNames(select(mintMs, maxtMs, Nil), lbls, mintMs, maxtMs)
+      if (in.footerApplies(matcherSets))
+        FooterLabelValues.labelNames(in.frame, lbls, mintMs, maxtMs)
       else None
     val names = viaFooter.getOrElse {
-      val m = matching(matcherSets, mintMs, maxtMs)
+      val m = in.matching(matcherSets)
       // BATCHED count aggregate: a single aggregate over every label column
       // is a codegen stress at the reference's own ≤32k-column schema cap
       // (method-split churn, then interpreted fallback). Each batch's scan
@@ -190,16 +200,19 @@ final class FrameStore(samples: DataFrame,
 
   def labelValues(label: String, matcherSets: Seq[Seq[LabelMatcher]],
                   mintMs: Long, maxtMs: Long, limit: Int): Seq[String] = {
+    val in = new Interval(mintMs, maxtMs)
     // no-matcher shortcut (ref search/search.go:173-201): resolve from the
     // parquet dictionary pages + footer stats, scanning only the interval's
     // boundary files — exact, falls back to the scan when inapplicable
     val viaFooter =
-      if (matcherSets.isEmpty)
-        FooterLabelValues.labelValues(select(mintMs, maxtMs, Nil), label, mintMs, maxtMs)
+      if (in.footerApplies(matcherSets))
+        FooterLabelValues.labelValues(in.frame, label, mintMs, maxtMs)
       else None
-    viaFooter.map(bounded(_, limit)).getOrElse {
-      val vals = matching(matcherSets, mintMs, maxtMs)
-        .select(col(label)).na.drop().distinct()
+    // an empty value is an absent label, as in Prometheus (a bucket's
+    // labels files can hold "" where their index marks the label absent)
+    viaFooter.map(vs => bounded(vs.filter(_.nonEmpty), limit)).getOrElse {
+      val vals = in.matching(matcherSets)
+        .select(col(label)).filter(col(label) =!= "").distinct()
       // unlimited: every value reaches the driver anyway, so sort there —
       // a Spark orderBy would add a range-sampling job and a sort shuffle;
       // limited: orderBy + limit plans as one take-ordered step
@@ -221,7 +234,7 @@ final class FrameStore(samples: DataFrame,
       array(lbls.sorted.map(l =>
         struct(lit(l).as("key"), col(l).as("value"))): _*),
       e => e.getField("value").isNotNull)
-    val selected = matching(matcherSets, mintMs, maxtMs)
+    val selected = new Interval(mintMs, maxtMs).matching(matcherSets)
       .select(lbls.map(col): _*)
       .distinct().withColumn("__graft_kv", kvKey).orderBy(col("__graft_kv"))
     bounded(selected, limit).collect().toSeq.map(r =>

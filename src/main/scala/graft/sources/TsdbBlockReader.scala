@@ -456,43 +456,6 @@ object TsdbBlockReader {
     loadSamples(spark, dirs, mintMs, maxtMs, matchers)
   }
 
-  /** Distinct values of `label` across TSDB blocks, off each block's
-    * label-index section ALONE via positional reads — one small task per
-    * block fetching TOC + label offset table + ONE label-index section +
-    * symbols, never a series entry and never whole index files (the
-    * dictionary-only shortcut the reference serves `label_values` with on
-    * its parquet side, `search/search.go:173-201`, applied to the raw
-    * TSDB bucket). */
-  def labelValues(spark: SparkSession, blockDirs: Seq[String],
-                  label: String): Seq[String] = {
-    import spark.implicits._
-    require(blockDirs.nonEmpty, "no TSDB block directories to read")
-    val confBc = spark.sparkContext.broadcast(
-      new SerializableConf(spark.sparkContext.hadoopConfiguration))
-    spark.createDataset(blockDirs)
-      .repartition(blockDirs.size)
-      .mapPartitions { dirs =>
-        val conf = confBc.value.value
-        dirs.flatMap { d =>
-          val p = new Path(s"$d/index")
-          val fs = p.getFileSystem(conf)
-          val len = fs.getFileStatus(p).getLen
-          val in = fs.open(p)
-          try {
-            val ix = new TsdbBlock.IndexReadAt((pos, n) => {
-              val b = new Array[Byte](n)
-              in.readFully(pos, b, 0, n)
-              rangedIndexBytes.addAndGet(n.toLong)
-              rangedIndexReads.incrementAndGet()
-              b
-            }, len)
-            TsdbBlock.readLabelValuesAt(ix, label)
-          } finally in.close()
-        }
-      }
-      .distinct().collect().sorted.toSeq
-  }
-
   /** An OPEN raw-TSDB bucket for repeated serving — the Syncer/open-block
     * cache analog (`locate/syncer.go:115-218`): every block's index parses
     * ONCE at open (refs persisted + materialized), the label schema and

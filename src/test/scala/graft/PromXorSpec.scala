@@ -166,7 +166,7 @@ class PromXorSpec extends SparkSpec {
   }
 
   // ------------------------------------------------------- store roundtrip
-  test("convertReference → openReferenceStore roundtrips the samples") {
+  test("convertReference → selectReferenceStore roundtrips the samples") {
     import org.apache.spark.sql.functions._
     val events = graft.sources.Tables.normalizeTs(
       spark.read.parquet(s"${sf()}/events.parquet"))
@@ -187,7 +187,7 @@ class PromXorSpec extends SparkSpec {
     assert(lblSchema.fieldNames.contains("___cf_meta_label___name__"))
     assert(!lblSchema.fieldNames.exists(_.startsWith("___cf_meta_chunk")))
 
-    val got = ReferenceFormat.openReferenceStore(spark, out)
+    val got = ReferenceFormat.selectReferenceStore(spark, out)
       .select(col("__name__"), col("uid"), col("ts_ms"), col("value"))
     val want = samples
       .groupBy(col("series_hash"), col("ts_ms"))
@@ -252,7 +252,7 @@ class PromXorSpec extends SparkSpec {
       days = Some(Seq("2024-01-02")))
 
     // full open: b reads null on day 2, not vanished
-    val all = ReferenceFormat.openReferenceStore(spark, out)
+    val all = ReferenceFormat.selectReferenceStore(spark, out)
     assert(all.columns.contains("b") && all.count() == 2)
     assert(all.filter(col("b").isNull).count() == 1)
 
@@ -343,7 +343,7 @@ class PromXorSpec extends SparkSpec {
       assert(java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$out/0/2024-01-01/$s.chunks.parquet")), s"chunks $s")
     }
-    val got = ReferenceFormat.openReferenceStore(spark, out)
+    val got = ReferenceFormat.selectReferenceStore(spark, out)
       .select("a", "b", "ts_ms", "value").as[(String, String, Long, Double)]
       .collect().toSet
     assert(got == rows.toSet, s"cross-zipped labels/chunks: $got")
@@ -365,18 +365,18 @@ class PromXorSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/0/$d2")))
 
     ReferenceFormat.convertReference(spark, samples, out, days = Some(Seq(d2)))
-    val both = ReferenceFormat.openReferenceStore(spark, out)
+    val both = ReferenceFormat.selectReferenceStore(spark, out)
       .select("__name__", "uid", "ts_ms", "value").collect().toSet
     // re-delivery of day 1: same samples, same store — idempotent, and day 2
     // untouched
     ReferenceFormat.convertReference(spark, samples, out, days = Some(Seq(d1)))
-    val after = ReferenceFormat.openReferenceStore(spark, out)
+    val after = ReferenceFormat.selectReferenceStore(spark, out)
       .select("__name__", "uid", "ts_ms", "value").collect().toSet
     assert(after == both && after.nonEmpty)
     // and the incremental result equals a one-shot conversion
     val once = java.nio.file.Files.createTempDirectory("graft-refonce").toString
     ReferenceFormat.convertReference(spark, samples, once)
-    val oneShot = ReferenceFormat.openReferenceStore(spark, once)
+    val oneShot = ReferenceFormat.selectReferenceStore(spark, once)
       .select("__name__", "uid", "ts_ms", "value").collect().toSet
     assert(oneShot == both)
   }
@@ -388,7 +388,7 @@ class PromXorSpec extends SparkSpec {
     val samples = graft.model.TimeSeriesModel.samples(events)
     val out = java.nio.file.Files.createTempDirectory("graft-refv1").toString
     ReferenceFormat.convertReference(spark, samples, out)
-    val v2 = ReferenceFormat.openReferenceStore(spark, out)
+    val v2 = ReferenceFormat.selectReferenceStore(spark, out)
       .select("__name__", "uid", "ts_ms", "value", "series_hash").collect().toSet
 
     // strip the V2 hash column from every chunks file in place → a V1 bucket
@@ -409,7 +409,7 @@ class PromXorSpec extends SparkSpec {
       fs.rename(part, new org.apache.hadoop.fs.Path(f))
       fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     }
-    val v1 = ReferenceFormat.openReferenceStore(spark, out)
+    val v1 = ReferenceFormat.selectReferenceStore(spark, out)
       .select("__name__", "uid", "ts_ms", "value", "series_hash").collect().toSet
     // identical rows INCLUDING the hash: the recomputed Prometheus
     // labels.Hash equals the stored one byte-for-byte
@@ -591,7 +591,7 @@ class PromXorSpec extends SparkSpec {
     }
   }
 
-  test("reference label_values/names: labels-file dictionaries only — chunks files can be gone") {
+  test("reference label_values/names: labels files only — chunks files can be gone") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val day = 1704067200000L
@@ -607,26 +607,25 @@ class PromXorSpec extends SparkSpec {
     ReferenceFormat.convertReference(spark, df, out,
       externalLabels = Map("cluster" -> "us"), numShards = 1)
 
-    // the metadata paths read labels files ONLY (the reference's
-    // no-constraint dictionary shortcut, search/search.go:173-201): delete
-    // every chunks file — if any path touched one, it would throw
+    // the store's label paths read labels files ONLY (the reference's
+    // no-constraint shortcut, search/search.go:173-201, is block-granular
+    // the same way): delete every chunks file — if any path touched one,
+    // it would throw
     java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()
       .asInstanceOf[java.util.Iterator[java.nio.file.Path]]
       .forEachRemaining { p =>
         if (p.toString.endsWith(".chunks.parquet")) java.nio.file.Files.delete(p)
       }
 
-    assert(ReferenceFormat.referenceLabelValues(spark, out, "svc") == Seq("a", "b"))
-    assert(ReferenceFormat.referenceLabelValues(spark, out, "env") == Seq("x", "y"))
+    val store = graft.sources.SeriesStore.reference(spark, out)
+    assert(store.labelValues("svc") == Seq("a", "b"))
+    assert(store.labelValues("env") == Seq("x", "y"))
     // stream ext label folds in; file labels + ext labels in the name set
-    assert(ReferenceFormat.referenceLabelValues(spark, out, "cluster") == Seq("us"))
-    assert(ReferenceFormat.referenceLabelNames(spark, out) ==
-      Seq("cluster", "env", "svc"))
+    assert(store.labelValues("cluster") == Seq("us"))
+    assert(store.labelNames() == Seq("cluster", "env", "svc"))
     // day-granular interval pruning: day 1 never sees env=y
-    assert(ReferenceFormat.referenceLabelValues(spark, out, "env",
-      day, day + D - 1) == Seq("x"))
-    assert(ReferenceFormat.referenceLabelValues(spark, out, "env",
-      day + D, day + 2 * D - 1) == Seq("y"))
+    assert(store.labelValues("env", Nil, day, day + D - 1) == Seq("x"))
+    assert(store.labelValues("env", Nil, day + D, day + 2 * D - 1) == Seq("y"))
   }
 
   test("engine label introspection off a reference bucket reads labels files, day-granular") {
@@ -668,6 +667,41 @@ class PromXorSpec extends SparkSpec {
     assert(side.exists(_.inputFiles.forall(_.endsWith(".labels.parquet"))))
     assert(ReferenceFormat.seriesSide(store.select(day + 9 * D, day + 10 * D)).isEmpty)
     assert(bucket.labelValues("__name__", Nil, day + 9 * D, day + 10 * D)._1.isEmpty)
+  }
+
+  test("bucket label calls bind their select frame once") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.promql.MatchEq
+    val day = 1704067200000L
+    val D = 86400000L
+    val df = Seq(("x", "a", day + 1000L, 1.0), ("y", "b", day + 2000L, 2.0))
+      .toDF("__name__", "svc", "ts_ms", "value")
+      .withColumn("sample_id", col("ts_ms"))
+      .withColumn("series_hash", xxhash64(col("__name__"), col("svc")))
+    val out = java.nio.file.Files.createTempDirectory("graft-refbind").toString
+    ReferenceFormat.convertReference(spark, df, out, numShards = 1)
+    val meta = Some(ReferenceFormat.bucketMeta(spark, out))
+    val binds = new java.util.concurrent.atomic.AtomicInteger()
+    val store = new graft.sources.FrameStore(
+      ReferenceFormat.selectReferenceStore(spark, out, meta = meta),
+      Some { (lo: Long, hi: Long) =>
+        binds.incrementAndGet()
+        ReferenceFormat.selectReferenceStore(spark, out, Nil, lo, hi, meta = meta)
+      })
+    val (lo, hi) = (day, day + D - 1)
+    val onX = Seq(Seq(MatchEq("__name__", "x")))
+    for ((call, answer) <- Seq[(String, () => Seq[Any])](
+      "labelNames" -> (() => store.labelNames(Nil, lo, hi)),
+      "labelNames{x}" -> (() => store.labelNames(onX, lo, hi)),
+      "labelValues" -> (() => store.labelValues("svc", Nil, lo, hi)),
+      "labelValues{x}" -> (() => store.labelValues("svc", onX, lo, hi)),
+      "series" -> (() => store.series(Nil, lo, hi)),
+      "series{x}" -> (() => store.series(onX, lo, hi)))) {
+      val b0 = binds.get()
+      assert(answer().nonEmpty, call)
+      assert(binds.get() - b0 == 1, s"$call bound ${binds.get() - b0} select frames")
+    }
   }
 
   test("bug-compatible: foreign boundary-spanning chunk invisible to cell-pruned reads") {
@@ -1122,7 +1156,7 @@ class PromXorSpec extends SparkSpec {
     ReferenceFormat.convertReference(spark, samples, out, externalLabels = ext)
     val eh = java.lang.Long.toUnsignedString(ReferenceFormat.externalLabelsHash(ext))
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/$eh/stream.pb")))
-    val got = ReferenceFormat.openReferenceStore(spark, out)
+    val got = ReferenceFormat.selectReferenceStore(spark, out)
     assert(got.columns.contains("cluster"))
     assert(got.select("cluster").distinct().collect().map(_.getString(0)).toSeq ==
       Seq("us-east"))
