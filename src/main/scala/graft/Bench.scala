@@ -54,21 +54,7 @@ object Bench {
     // SPARK_GRAFT_REPEAT=n times each query n times (min reported)
     val only = args.toSet
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "1").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .getOrCreate()
-    // production sessions run with the engine's optimizer rule active
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations ++ graft.plans.GraftRules.all
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // warmup: exercise scan+shuffle+agg codegen paths once
     try SparkEntry.queries.get("q1_agg").foreach(_(spark, sfDir).count())

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model.TimeSeriesModel
 import graft.promql._
+import graft.sources.SeriesStore
 
 /** Thanos Store API surface — the reference's second query entry point
   * (SURVEY §3.2; ref `api/grpc/thanos.go:376-533`): `Info`, `Series`,
@@ -192,33 +193,15 @@ final class StoreApi(samples: DataFrame,
   }
 
   /** storepb.Store/LabelNames (ref api/grpc/thanos.go:476-495). */
-  def labelNames(req: LabelsRequest): LabelsResponse = {
-    val s = base(Nil)
-    val lbls = labelColsOf(s)
-    val names =
-      if (req.matchers.isEmpty) lbls.sorted // schema-only (ref search/search.go:294)
-      else {
-        val m = Eval.select(s, req.matchers, req.startMs, req.endMs)
-        val counts = m.agg(count(col(lbls.head)).as(lbls.head),
-          lbls.tail.map(l => count(col(l)).as(l)): _*).collect()(0)
-        lbls.filter(l => counts.getAs[Long](l) > 0).sorted
-      }
-    val truncated = req.limit > 0 && names.size > req.limit
-    LabelsResponse(if (truncated) names.take(req.limit) else names,
-      if (truncated) Seq(TruncatedWarning) else Nil)
-  }
+  def labelNames(req: LabelsRequest): LabelsResponse = labelsResponse(SeriesStore.truncated(
+    engineFor(Nil, 0L).labelNames(req.matchers, req.startMs, req.endMs), req.limit))
 
   /** storepb.Store/LabelValues (ref api/grpc/thanos.go:497-533). */
-  def labelValues(req: LabelsRequest): LabelsResponse = {
-    val s = base(Nil)
-    if (!s.columns.contains(req.label)) return LabelsResponse(Nil, Nil)
-    val vals = Eval.select(s, req.matchers, req.startMs, req.endMs)
-      .select(col(req.label)).na.drop().distinct().orderBy(col(req.label))
-    val rows = (if (req.limit > 0) vals.limit(req.limit + 1) else vals)
-      .collect().toSeq
-    val truncated = req.limit > 0 && rows.size > req.limit
-    LabelsResponse(
-      (if (truncated) rows.take(req.limit) else rows).map(_.getString(0)),
-      if (truncated) Seq(TruncatedWarning) else Nil)
+  def labelValues(req: LabelsRequest): LabelsResponse = labelsResponse(
+    engineFor(Nil, 0L).labelValues(req.label, req.matchers, req.startMs, req.endMs, req.limit))
+
+  private def labelsResponse(answer: (Seq[String], Boolean)): LabelsResponse = {
+    val (values, truncated) = answer
+    LabelsResponse(values, if (truncated) Seq(TruncatedWarning) else Nil)
   }
 }

@@ -1,7 +1,7 @@
 package graft.examples
 
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.limits.QueryGate
 import graft.promql.{Eval, LabelMatcher, MatchEq, MatchRe}
@@ -25,8 +25,10 @@ import graft.promql.{Eval, LabelMatcher, MatchEq, MatchRe}
   * source (serving an unmigrated bucket) — whose printed
   * `query_parses_delta` must be 0: concurrent queries slice the cached
   * refs, never re-parse an index. The comparison of per-shape p50/p95
-  * across phases is the serve-under-migration interference signal; the
-  * FAIR scheduler pool keeps the convert job from starving the query pool.
+  * across phases is the serve-under-migration interference signal. Every
+  * job lands in Spark's one `default` pool; under FAIR mode that pool
+  * shares task slots among concurrent jobs, so the convert job cannot hold
+  * every slot while queries wait.
   *
   * Usage: `runMain graft.examples.ConcurrentSoak [threads] [itersPerThread]
   * [scale] [migSeries]` — scale multiplies workload B's 1.5M series (10 →
@@ -45,16 +47,10 @@ object ConcurrentSoak {
     val iters = if (args.length > 1) args(1).toInt else 8
     val scale = if (args.length > 2) args(2).toInt else 1
     val migSeries = if (args.length > 3) args(3).toInt else 100000
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.scheduler.mode", "FAIR") // serving pools share fairly
-      .getOrCreate()
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations ++ graft.plans.GraftRules.all
-    spark.sparkContext.setLogLevel("WARN")
+    // the scheduler mode is fixed when the context starts. With no pool
+    // file, Spark 4's `default` pool then schedules FAIR as well
+    sys.props("spark.scheduler.mode") = "FAIR"
+    val spark = graft.GraftSession()
     val tmp = java.nio.file.Files.createTempDirectory("graft-soak").toString
 
     // workload B's series CROSS PRODUCT (db/db_bench_test.go:155-281):
@@ -281,8 +277,9 @@ object ConcurrentSoak {
     // queries (LSH near-dup dedup, bloom decontamination) cycle over the
     // documents fixture while the SAME serving mix runs: the one-cluster
     // "convert + curate + serve" deployment shape a real installation has.
-    // FAIR scheduling keeps the long curation jobs from starving the query
-    // pool; per-shape p50/p95 against phase 1 is the interference signal.
+    // FAIR mode shares the default pool's task slots between the long
+    // curation jobs and the queries; per-shape p50/p95 against phase 1 is
+    // the interference signal.
     var curShapes = Map.empty[String, Seq[Double]]
     var curWall = 0.0; var curErrs = 0L
     val curCycles = new java.util.concurrent.atomic.AtomicLong()

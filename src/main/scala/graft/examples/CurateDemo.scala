@@ -145,13 +145,7 @@ object CurateDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val bench = if (args.length > 1) args.drop(1).toSeq else Seq("src0", "src1")
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("graft-curate-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     val (packed, f) = run(spark, sfDir, bench)
     println(s"DRIVE input:     ${f.input} docs")

@@ -1,7 +1,6 @@
 package graft.examples
 
 import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.etl.{Downsample, Ingest, Planner, Retention}
 import graft.sources.Tables
@@ -13,13 +12,7 @@ import graft.streaming.EventsStream
 object EtlDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("graft-etl-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     val t = Tables(spark, sfDir)
     val out = sys.env.getOrElse("GRAFT_DEMO_OUT",

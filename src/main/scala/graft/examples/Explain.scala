@@ -1,23 +1,12 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: `runMain graft.examples.Explain <queryName> [sfDir]`
   * prints the formatted physical plan and wall time for one registry query. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    // production sessions run with the engine's optimizer rule active
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations ++ graft.plans.GraftRules.all
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     df.explain("formatted")

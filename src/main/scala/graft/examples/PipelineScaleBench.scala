@@ -2,7 +2,7 @@ package graft.examples
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{TextOps, VectorOps}
 import graft.sources.Tables
@@ -71,25 +71,17 @@ object PipelineScaleBench {
     val nVecs = if (args.length > 1) args(1).toInt else 1000000
     val nClusterDocs = if (args.length > 2) args(2).toInt else 1000000
     val nSmallVecs = if (args.length > 3) args(3).toInt else 32768
+    val spark = graft.GraftSession()
     // Scale-adaptive partitioning (guide §2.2/§9): the former fixed
     // shuffle.partitions=32 sized reduce partitions at data-size/32 — at
     // 5M docs dd_ngram_jaccard's ~13 GB posting-list exchange meant ~420 MB
     // of sort state per task × 32 concurrent tasks on one 8 GB heap =
     // UNABLE_TO_ACQUIRE_MEMORY (measured, r22). 256 initial partitions cap
-    // per-task state at ~50 MB there, and AQE coalescing folds small
-    // shuffles back down (advisory 64 MB), so tiny stages don't pay 256
-    // tasks. This is the bench harness config, not a query change; the
-    // driver-contract Bench at sf0.1 keeps partitions = cpus.
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "256")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // per-task state at ~50 MB there, and AQE coalescing (on by default,
+    // advisory 64 MB) folds small shuffles back down, so tiny stages don't
+    // pay 256 tasks. This is the bench harness config, not a query change;
+    // `Bench` at sf0.1 keeps partitions = cpus.
+    spark.conf.set("spark.sql.shuffle.partitions", "256")
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
 

@@ -1,14 +1,13 @@
 package graft.examples
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job profiler for one registry query:
   * `runMain graft.examples.Profile <queryName> [sfDir] [runs]`.
-  * Mirrors Bench's session config, runs the query `runs` times (min wall
-  * reported like the bench), and prints, for the FASTEST run, each Spark
-  * job's wall, task count and first-stage name — the breakdown the
-  * optimization guide (§1) wants before touching a plan. */
+  * Runs on Bench's session ([[graft.GraftSession]]), runs the query `runs`
+  * times (min wall reported like the bench), and prints, for the FASTEST
+  * run, each Spark job's wall, task count and first-stage name — the
+  * breakdown to read before touching a plan. */
 object Profile {
   private final class JobListener extends SparkListener {
     final case class J(id: Int, var desc: String = "", var start: Long = 0,
@@ -39,18 +38,7 @@ object Profile {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .getOrCreate()
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations ++ graft.plans.GraftRules.all
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val fn = graft.SparkEntry.queries(name)
     // bench-identical warmup
     try graft.SparkEntry.queries.get("q1_agg").foreach(_(spark, sfDir).count())

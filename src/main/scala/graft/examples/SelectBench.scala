@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.promql.{Eval, LabelMatcher, MatchEq, MatchNotRe, MatchRe}
 
@@ -45,16 +45,7 @@ object SelectBench {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("ab")
     val repeat = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    // production sessions run with the engine's optimizer rule active
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations ++ graft.plans.GraftRules.all
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val tmp = java.nio.file.Files.createTempDirectory("graft-selectbench").toString
 
     def report(wl: String, rs: Seq[(String, Double, Long)]): Unit = {

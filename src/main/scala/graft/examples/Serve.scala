@@ -1,6 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import graft.api.{HttpApi, PromEngine}
 
 /** The `serve` command analog (ref cmd/serve.go): Prometheus-compatible HTTP
@@ -22,18 +21,7 @@ object Serve {
       maxRows = sys.env.get("GRAFT_MAX_ROWS").map(_.toLong),
       maxBytes = sys.env.get("GRAFT_MAX_SCAN_BYTES").map(_.toLong),
       maxBytesMidScan = sys.env.get("GRAFT_MAX_READ_BYTES").map(_.toLong))
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    // production sessions run with the engine's optimizer rule active
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations ++ graft.plans.GraftRules.all
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     // any serving layout — chunked, flat, reference bucket, raw TSDB blocks
     // or the raw fixture; see SeriesStore.open for the precedence. An open
     // raw-TSDB bucket pins a persisted refs dataset for the server's life;

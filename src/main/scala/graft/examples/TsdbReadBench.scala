@@ -1,6 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -45,13 +44,7 @@ object TsdbReadBench {
     val repeat = if (args.length > 1) args(1).toInt else 3
     val nBlocks = if (args.length > 2) args(2).toInt else 1
     val openOnly = args.length > 3 && args(3) == "open"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     val jan1 = 1704067200000L
     val day = 86400000L

@@ -23,10 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * names; they are pathological in labels), matching the reference's own
   * prefix-extraction tradeoff.
   *
-  * Register per session:
-  *  - `spark.experimental.extraOptimizations ++= Seq(PrefixRegexRewrite)`, or
-  *  - `SparkSession.builder().withExtensions(new GraftExtensions)` /
-  *    `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
+  * Every main runs it through [[graft.GraftSession]], which installs
+  * [[GraftRules]]; other sessions register it with
+  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 object PrefixRegexRewrite extends Rule[LogicalPlan] {
 
@@ -86,8 +85,8 @@ object PrefixRegexRewrite extends Rule[LogicalPlan] {
 }
 
 /** Every production optimizer rule of the engine, in application order —
-  * mains and `GraftExtensions` register from this one list so a new rule
-  * cannot be active in some entry points and missing in others. */
+  * `GraftSession` and `GraftExtensions` register from this one list so a new
+  * rule cannot be active in some entry points and missing in others. */
 object GraftRules {
   val all: Seq[Rule[LogicalPlan]] = Seq(PrefixRegexRewrite, ChunkFramePrune)
 }

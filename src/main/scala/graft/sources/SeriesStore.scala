@@ -162,6 +162,11 @@ final class FrameStore(samples: DataFrame,
       }
   }
 
+  /** A label's value, null where the label is absent. An empty value is an
+    * absent label, as in Prometheus: a bucket's labels files can hold ""
+    * where their index marks the label absent. */
+  private def valueOf(label: String) = nullif(col(label), lit(""))
+
   /** Columns per `labelNames` count aggregate — large enough that any
     * realistic schema fits in one pass, small enough that Janino compiles
     * each batch without interpreted fallback. */
@@ -190,8 +195,8 @@ final class FrameStore(samples: DataFrame,
       // all batches matches the one wide pass; job overhead is ~32 cheap
       // aggregates at the ceiling, zero extra at typical (<1k) widths.
       lbls.grouped(LabelNamesAggBatch).flatMap { batch =>
-        val counts = m.agg(count(col(batch.head)).as(batch.head),
-          batch.tail.map(l => count(col(l)).as(l)): _*).collect()(0)
+        val present = batch.map(l => count(valueOf(l)).as(l))
+        val counts = m.agg(present.head, present.tail: _*).collect()(0)
         batch.filter(l => counts.getAs[Long](l) > 0)
       }.toSeq.sorted
     }
@@ -208,8 +213,6 @@ final class FrameStore(samples: DataFrame,
       if (in.footerApplies(matcherSets))
         FooterLabelValues.labelValues(in.frame, label, mintMs, maxtMs)
       else None
-    // an empty value is an absent label, as in Prometheus (a bucket's
-    // labels files can hold "" where their index marks the label absent)
     viaFooter.map(vs => bounded(vs.filter(_.nonEmpty), limit)).getOrElse {
       val vals = in.matching(matcherSets)
         .select(col(label)).filter(col(label) =!= "").distinct()
@@ -235,7 +238,7 @@ final class FrameStore(samples: DataFrame,
         struct(lit(l).as("key"), col(l).as("value"))): _*),
       e => e.getField("value").isNotNull)
     val selected = new Interval(mintMs, maxtMs).matching(matcherSets)
-      .select(lbls.map(col): _*)
+      .select(lbls.map(l => valueOf(l).as(l)): _*)
       .distinct().withColumn("__graft_kv", kvKey).orderBy(col("__graft_kv"))
     bounded(selected, limit).collect().toSeq.map(r =>
       lbls.flatMap(l => Option(r.getAs[Any](l)).map(v => l -> v.toString)).toMap)

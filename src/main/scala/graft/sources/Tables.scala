@@ -60,11 +60,11 @@ object Tables {
     * physical form the driver wrote this round — the single copy both the
     * batch catalog and the streaming source go through:
     *  - TIMESTAMP(NANOS) arrives as a raw long
-    *    (`spark.sql.legacy.parquet.nanosAsLong=true` in our session builders);
+    *    (`spark.sql.legacy.parquet.nanosAsLong=true` in [[graft.GraftSession]]);
     *    truncate to micros — the same truncation DuckDB applies.
     *  - TIMESTAMP(MICROS, isAdjustedToUTC=false) arrives as TIMESTAMP_NTZ
     *    (Spark's `inferTimestampNTZ`); cast to LTZ. Session timezone is UTC in
-    *    every builder, so the cast preserves the stored micros bit-for-bit —
+    *    every session, so the cast preserves the stored micros bit-for-bit —
     *    exactly how DuckDB's naive TIMESTAMP treats the same column.
     * Downstream (`unix_millis`, watermarks) then works uniformly. */
   def normalizeTs(df: DataFrame): DataFrame = {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.model.TimeSeriesModel
 import graft.queries.Registry
-import graft.plans.PrefixRegexRewrite
+import graft.plans.{GraftRules, PrefixRegexRewrite}
 import graft.promql.{Matchers, MatchRe, MatchNotRe}
 import graft.sources.Tables
 
@@ -172,5 +172,35 @@ class PlanRuleSpec extends SparkSpec {
     val ruled = withRule(got())
     assert(plain == Set("click", "<null>")) // missing ≡ "" matches !~
     assert(ruled == plain)
+  }
+
+  test("GraftSession installs each GraftRules rule once, however often it runs") {
+    val before = spark.experimental.extraOptimizations
+    try {
+      GraftSession.installRules(spark)
+      GraftSession.installRules(spark)
+      val rules = spark.experimental.extraOptimizations
+      GraftRules.all.foreach(r => assert(rules.count(_ == r) == 1, r.ruleName))
+      assert(rules.take(before.size) == before) // appended after what it had
+    } finally spark.experimental.extraOptimizations = before
+  }
+
+  test("only GraftSession builds a session or sets optimizer rules in src/main") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), root.toAbsolutePath)
+    val files = {
+      val s = Files.walk(root)
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    val hits = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("SparkSession.builder") || line.contains("extraOptimizations")
+    } yield s"$f:${i + 1}"
+    assert(hits.nonEmpty, s"no session builder under $root")
+    assert(hits.forall(_.contains("/GraftSession.scala:")), hits.mkString("\n"))
   }
 }

@@ -626,6 +626,10 @@ class PromXorSpec extends SparkSpec {
     // day-granular interval pruning: day 1 never sees env=y
     assert(store.labelValues("env", Nil, day, day + D - 1) == Seq("x"))
     assert(store.labelValues("env", Nil, day + D, day + 2 * D - 1) == Seq("y"))
+    // series and label names read the stored env="" of svc=b as absent too
+    val onB = Seq(Seq(graft.promql.MatchEq("svc", "b")))
+    assert(store.series(onB, day, day + D - 1) == Seq(Map("svc" -> "b", "cluster" -> "us")))
+    assert(store.labelNames(onB, day, day + D - 1) == Seq("cluster", "svc"))
   }
 
   test("engine label introspection off a reference bucket reads labels files, day-granular") {

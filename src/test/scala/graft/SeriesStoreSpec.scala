@@ -128,4 +128,21 @@ class SeriesStoreSpec extends SparkSpec {
       }
     } finally stores.foreach(_._2.close())
   }
+
+  test("a frame's empty label value is an absent label") {
+    val df = Seq[(String, String, String, Long, Double)](
+      ("x", "a", "", jan1 + 1000L, 1.0),
+      ("x", "a", null, jan1 + 2000L, 2.0), // the same series as the row above
+      ("x", "b", null, jan1 + 3000L, 3.0),
+      ("y", "", "p", jan1 + 4000L, 4.0))
+      .toDF("__name__", "svc", "env", "ts_ms", "value")
+    val store = new graft.sources.FrameStore(df)
+    val (lo, hi) = (jan1, jan1 + D - 1)
+    assert(store.series(Nil, lo, hi) == Seq(
+      Map("__name__" -> "x", "svc" -> "a"), Map("__name__" -> "x", "svc" -> "b"),
+      Map("__name__" -> "y", "env" -> "p")))
+    assert(store.labelNames(Nil, lo, hi) == Seq("__name__", "env", "svc"))
+    assert(store.labelNames(Seq(Seq(MatchEq("__name__", "x"))), lo, hi) == Seq("__name__", "svc"))
+    assert(store.labelNames(Seq(Seq(MatchEq("__name__", "y"))), lo, hi) == Seq("__name__", "env"))
+  }
 }
