@@ -135,10 +135,13 @@ object Bench {
     writeLine(line, Some(summary))
     // self-documenting artifact: rewrite the auto section of BENCH_NOTES.md
     // with this sweep's self-defense report (raw vs confirmed per rerun
-    // query), so the reconfirmation evidence never needs hand-editing
-    try writeNotes(sfDir, confirmed.size, total, median, threshold,
-      raw.toMap, reruns.toMap, loadAvg)
-    catch { case e: Exception => System.err.println(s"[bench] notes: $e") }
+    // query), so the reconfirmation evidence never needs hand-editing. Only
+    // a full sweep writes it: a query-subset run must not replace the
+    // sweep's report with its own
+    if (only.isEmpty)
+      try writeNotes(sfDir, confirmed.size, total, median, threshold,
+        raw.toMap, reruns.toMap, loadAvg)
+      catch { case e: Exception => System.err.println(s"[bench] notes: $e") }
     spark.stop()
   }
 

@@ -308,18 +308,17 @@ object Ingest {
   private val frameCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
-  /** Open (and memoize) the frame relation of a chunk layout: repeated
-    * selects reuse the resolved schema + file listing instead of paying a
-    * fresh footer/listing pass per query — the reference likewise keeps
-    * block readers open across queries (`locate/locate.go`). Writes through
-    * [[writeFrames]] invalidate; external writers must call
-    * [[invalidateChunkFrames]]. */
-  def openChunkFrames(spark: SparkSession, outDir: String): DataFrame =
+  /** The frame relation of a chunk layout with each frame's points decoded
+    * beside it ([[withPoints]]), memoized: repeated selects reuse the
+    * resolved schema + file listing instead of paying a fresh footer/listing
+    * pass per query — the reference likewise keeps block readers open
+    * across queries (`locate/locate.go`) — and add only their predicate and
+    * the output projection to a plan analyzed once. Every chunk write in
+    * this codebase goes through [[writeFrames]], which evicts the entry, so
+    * a listing is never stale after an in-process write. */
+  private def chunkPoints(spark: SparkSession, outDir: String): DataFrame =
     frameCache.computeIfAbsent((spark, s"$outDir/chunks"),
-      k => k._1.read.parquet(k._2))
-
-  def invalidateChunkFrames(outDir: String): Unit =
-    frameCache.keySet.removeIf(_._2 == s"$outDir/chunks")
+      k => withPoints(k._1.read.parquet(k._2)))
 
   /** Merge a batch of samples into an existing chunk layout: only the dates
     * the batch touches are re-framed (existing frames for those dates decode,
@@ -361,11 +360,11 @@ object Ingest {
     val merged =
       if (!java.nio.file.Files.isDirectory(chunksDir)) fresh
       else {
-        val fr = openChunkFrames(spark, outDir)
+        val fr = chunkPoints(spark, outDir)
         require(!fr.columns.contains("stream"),
           "mergeChunked targets a single-stream chunk layout; this store is " +
             "stream-partitioned — merge per stream into its own subtree instead")
-        val existing = decodeFrames(fr.filter(col("date").isin(dates: _*)))
+        val existing = pointSamples(fr.filter(col("date").isin(dates: _*)))
         // first-wins at sample grain: the stored point beats a re-delivery
         // (ref vertical merge semantics, convert/convert.go chunk dedup).
         // The histogram struct is PAYLOAD like value, never a grouping key —
@@ -403,45 +402,47 @@ object Ingest {
     Set("win", "mint", "maxt", "n_samples", "data", "hdata", "date", "series_hash",
       "stream")
 
-  /** Explode a frame DataFrame back to flat samples. Map-side only: the
-    * decode is the codegen'd [[graft.functions.ChunkDecode]] (or
-    * [[graft.functions.HistChunkDecode]] for histogram frames — those rows
-    * come back with the `h` struct column restored), no shuffle.
-    * Frames store no per-sample ingest id, so `sample_id` — the engine's
-    * deterministic tie-break column — is synthesized as `ts_ms`, the same
-    * convention the subquery grid uses (`promql/Compiler.subqueryPoints`). */
-  private def decodeFrames(df: DataFrame): DataFrame = {
-    val lbl = df.columns.filterNot(chunkBookkeeping).toSeq
-    val head = Seq(col("date"), col("series_hash")) ++ lbl.map(col)
-    if (!df.columns.contains("hdata"))
-      df.select((head
-          :+ explode(graft.functions.ChunkDecode(col("data"))).as("__graft_p")): _*)
-        .select((head
-          :+ col("__graft_p.ts_ms").as("ts_ms")
-          :+ col("__graft_p.value").as("value")): _*)
-        .withColumn("sample_id", col("ts_ms"))
-    else {
-      // both branches produce array<struct<ts_ms,value,h>> so one explode
-      // serves float and histogram frames alike
-      val floatPts = transform(graft.functions.ChunkDecode(col("data")),
-        p => struct(p.getField("ts_ms").as("ts_ms"), p.getField("value").as("value"),
-          lit(null).cast(graft.functions.HistChunk.HistType).as("h")))
-      val pts = when(col("data").isNotNull, floatPts)
-        .otherwise(graft.functions.HistChunkDecode(col("hdata")))
-      df.select((head :+ explode(pts).as("__graft_p")): _*)
-        .select((head
-          :+ col("__graft_p.ts_ms").as("ts_ms")
-          :+ col("__graft_p.value").as("value")
-          :+ col("__graft_p.h").as("h")): _*)
-        .withColumn("sample_id", col("ts_ms"))
-    }
+  /** Each frame row with its points decoded and exploded beside it, as the
+    * `__graft_p` struct (ts_ms, value, and h on a layout with histogram
+    * frames). Map-side only: the decode is the codegen'd
+    * [[graft.functions.ChunkDecode]] (or [[graft.functions.HistChunkDecode]]
+    * for histogram frames), no shuffle. A filter on the frame columns above
+    * it pushes below the decode. */
+  private def withPoints(df: DataFrame): DataFrame = {
+    val pts =
+      if (!df.columns.contains("hdata")) graft.functions.ChunkDecode(col("data"))
+      else {
+        // both branches produce array<struct<ts_ms,value,h>> so one explode
+        // serves float and histogram frames alike
+        val floatPts = transform(graft.functions.ChunkDecode(col("data")),
+          p => struct(p.getField("ts_ms").as("ts_ms"), p.getField("value").as("value"),
+            lit(null).cast(graft.functions.HistChunk.HistType).as("h")))
+        when(col("data").isNotNull, floatPts)
+          .otherwise(graft.functions.HistChunkDecode(col("hdata")))
+      }
+    df.select(col("*"), explode(pts).as("__graft_p"))
+  }
+
+  /** [[withPoints]] rows as flat samples (histogram frames come back with
+    * the `h` struct column restored). Frames store no per-sample ingest id,
+    * so `sample_id` — the engine's deterministic tie-break column — is
+    * synthesized as `ts_ms`, the same convention the subquery grid uses
+    * (`promql/Compiler.subqueryPoints`). */
+  private def pointSamples(withPts: DataFrame): DataFrame = {
+    val lbl = withPts.columns.filterNot(c => chunkBookkeeping(c) || c == "__graft_p").toSeq
+    val h = if (withPts.columns.contains("hdata")) Seq(col("__graft_p.h").as("h")) else Nil
+    withPts.select((Seq(col("date"), col("series_hash")) ++ lbl.map(col) ++
+      Seq(col("__graft_p.ts_ms").as("ts_ms"), col("__graft_p.value").as("value")) ++ h
+      :+ col("__graft_p.ts_ms").as("sample_id")): _*)
   }
 
   /** Decode-on-read over the chunk layout: explode each frame back to
     * samples. Matcher/date predicates push down to the chunk scan (label
-    * columns and `date` are plain columns). */
+    * columns and `date` are plain columns); a `ts_ms` bound does not — it
+    * sits above the decode, so time-bounded reads go through
+    * [[selectChunkedSamples]]. */
   def openChunkedSamples(spark: SparkSession, outDir: String): DataFrame =
-    decodeFrames(openChunkFrames(spark, outDir))
+    pointSamples(chunkPoints(spark, outDir))
 
   /** Pruned select over the chunk layout — the query path at 100 TB. All
     * pruning happens BEFORE any byte is decoded, mirroring the reference's
@@ -458,11 +459,12 @@ object Ingest {
     *    `ts_ms` trim runs post-explode on the (tiny) decoded remainder.
     *
     * Result schema matches [[openChunkedSamples]], so the PromQL engine runs
-    * over it unchanged. */
+    * over it unchanged; it is the chunk layout's per-query select in
+    * [[graft.sources.SeriesStore.open]]. */
   def selectChunkedSamples(spark: SparkSession, outDir: String,
                            matchers: Seq[graft.promql.LabelMatcher],
                            mintMs: Long, maxtMs: Long): DataFrame = {
-    val frames = openChunkFrames(spark, outDir)
+    val points = chunkPoints(spark, outDir)
     // same DATE-literal clamp as Eval.timeBound: partition discovery types
     // `date` as DATE; an unbounded query's ±Long bound must stay formattable
     val cap = 253402214400000L // 9999-01-01T00:00:00Z
@@ -476,7 +478,7 @@ object Ingest {
     // any file is listed (ref search/search.go:356-376). Matchers on
     // non-external labels pass through to the frame scan untouched.
     val streamPred: Option[org.apache.spark.sql.Column] =
-      if (!frames.columns.contains("stream")) None
+      if (!points.columns.contains("stream") || matchers.isEmpty) None
       else {
         val streams = readStreamSidecars(outDir)
         val alive = streams.collect { case (id, ext)
@@ -484,10 +486,12 @@ object Ingest {
             .forall(m => m.matches(ext(m.label))) => id }.toSeq
         Some(if (alive.isEmpty) lit(false) else col("stream").isin(alive: _*))
       }
-    val pruned = frames.filter(
+    // one filter over the memoized decoded view: the frame conjuncts push
+    // below the decode, only the exact ts_ms trim stays above it
+    pointSamples(points.filter(
       streamPred.map(overlap && _).getOrElse(overlap) &&
-        graft.promql.Matchers.compile(frames, matchers))
-    decodeFrames(pruned).filter(col("ts_ms").between(mintMs, maxtMs))
+        graft.promql.Matchers.compile(points, matchers) &&
+        col("__graft_p.ts_ms").between(mintMs, maxtMs)))
   }
 
   /** External labels must never clobber per-series labels at rest: the fold

@@ -609,7 +609,7 @@ object ReferenceFormat {
 
     // frame-header time skip inside surviving cells: frames whose
     // [mint, maxt] header misses the interval never pay the bit-stream
-    // decode (the native layout's ChunkFramePrune equivalence)
+    // decode (the native layout's `mint`/`maxt` frame prune)
     val pts = explode(concat(
       ChunkCols.map(c => PromFramesDecode(col(c), mintMs, maxtMs)): _*))
     // days proven float-only read without `h`: the frame then has the

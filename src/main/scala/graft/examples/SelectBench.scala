@@ -11,11 +11,17 @@ import graft.promql.{Eval, LabelMatcher, MatchEq, MatchNotRe, MatchRe}
   * materialization (count + sum forces every matched row through the scan,
   * the analog of the reference's chunk-iterator drain).
   *
-  * Usage: `runMain graft.examples.SelectBench [a|b|ab] [repeat]` — prints one
-  * JSON line per workload with min-of-repeat seconds and matched row counts.
-  * Workload A: 80k series (10k idx × 8 status_code), metric `foo`.
-  * Workload B: 1.5M series (5 metrics × 100 instances × 5 regions × 10 zones
-  * × 20 services × 3 envs).
+  * Usage: `runMain graft.examples.SelectBench [modes] [repeat]` — `modes`
+  * is any combination of the letters below (default `ab`); prints one JSON
+  * line per workload with min-of-repeat seconds and matched row counts.
+  *  - `a`: 80k series (10k idx × 8 status_code), metric `foo`.
+  *  - `b`: 1.5M series (5 metrics × 100 instances × 5 regions × 10 zones
+  *    × 20 services × 3 envs), plus matcherless label values.
+  *  - `r`: workload A stored as a reference bucket.
+  *  - `c`: a day of workload A samples, flat layout vs chunk layout.
+  *  - `d`: month-long counter increase, raw walk vs 1h downsample layer.
+  *  - `e`: the same increase at a misaligned instant, raw vs hybrid route.
+  *  - `x`: 10× scale rehearsal (15M series, 10-day reference bucket).
   */
 object SelectBench {
 
@@ -175,9 +181,8 @@ object SelectBench {
     if (mode.contains("c")) {
       // Chunk-layout select throughput: workload A's series shape × a day of
       // 15s-cadence samples (80k series × 120 points = 9.6M samples), selected
-      // over a quarter-day window three ways — flat sorted parquet, the
-      // hand-pruned chunked select, and the decoded view where ChunkFramePrune
-      // carries the bounds to the frame scan. Row counts must agree.
+      // over a quarter-day window two ways — flat sorted parquet and the
+      // chunk layout's time-bounded select. Row counts must agree.
       val codes = Seq("200", "202", "300", "404", "400", "429", "500", "503")
       val day = 86400000L
       val gen = spark.range(10000).select(col("id"))
@@ -190,7 +195,6 @@ object SelectBench {
           xxhash64(col("id").cast("string"), col("status_code")).as("series_hash"))
       val flat = writeSorted(gen, s"$tmp/c_flat", Seq("__name__", "idx", "status_code"))
       graft.etl.Ingest.mergeChunked(spark, gen, s"$tmp/c_chunked")
-      val decoded = graft.etl.Ingest.openChunkedSamples(spark, s"$tmp/c_chunked")
       val (lo, hi) = (0L, day / 4 - 1) // first quarter of the day: 1 of 3 frames
       val queries = Seq(
         "ShreddedByStatusCode" -> Seq(MatchEq("__name__", "foo"), MatchRe("status_code", "4..")),
@@ -211,8 +215,6 @@ object SelectBench {
         timed(n, m => Eval.select(flat, m, lo, hi), ms) })
       report("chunk_pruned", queries.map { case (n, ms) =>
         timed(n, m => graft.etl.Ingest.selectChunkedSamples(spark, s"$tmp/c_chunked", m, lo, hi), ms) })
-      report("chunk_decoded_rule", queries.map { case (n, ms) =>
-        timed(n, m => Eval.select(decoded, m, lo, hi), ms) })
     }
 
     // shared month-long counter store for workloads D and E, written in the

@@ -358,9 +358,10 @@ object PromXorChunk {
   /** One framed chunk-column cell → its samples as 3-field model rows
     * (ts, value, h), in frame order. Frames whose [mint, maxt] header lies
     * entirely outside [tMin, tMax] are skipped on the 20-byte header alone —
-    * no bit-stream decode (the native layout's ChunkFramePrune analog for
-    * the reference format). Histogram frames (enc 2/3) decode to the pinned
-    * model struct with value = count. */
+    * no bit-stream decode (the reference format's analog of the native
+    * layout's `mint`/`maxt` frame prune in `Ingest.selectChunkedSamples`).
+    * Histogram frames (enc 2/3) decode to the pinned model struct with
+    * value = count. */
   def decodeFrames(bytes: Array[Byte], tMin: Long, tMax: Long): ArrayData = {
     if (bytes == null || bytes.length == 0) return new GenericArrayData(new Array[Any](0))
     // first pass: total sample count over surviving frames

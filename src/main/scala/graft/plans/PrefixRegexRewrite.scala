@@ -88,7 +88,7 @@ object PrefixRegexRewrite extends Rule[LogicalPlan] {
   * `GraftSession` and `GraftExtensions` register from this one list so a new
   * rule cannot be active in some entry points and missing in others. */
 object GraftRules {
-  val all: Seq[Rule[LogicalPlan]] = Seq(PrefixRegexRewrite, ChunkFramePrune)
+  val all: Seq[Rule[LogicalPlan]] = Seq(PrefixRegexRewrite)
 }
 
 /** `spark.sql.extensions`-compatible registration: the optimizer rules plus

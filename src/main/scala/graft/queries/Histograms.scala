@@ -364,7 +364,8 @@ object Histograms {
     // Histogram chunks in the CHUNKED layout: cumulative native-histogram
     // series framed as [[graft.functions.HistChunk]] bytes per (series, 8h
     // window) — the reference's histogram chunk encodings riding beside XOR
-    // chunks (api/grpc/thanos.go:462-473) — decoded on read, then the same
+    // chunks (api/grpc/thanos.go:462-473) — decoded on read through the
+    // time-bounded select (only frames overlapping the lookback), then the same
     // as-of selection + quantile as nh_instant, hash-matched against DuckDB
     // recomputing from raw events. Proves a chunked store serves nh_*.
     Q("s5_chunked_hist", {
@@ -375,7 +376,7 @@ object Histograms {
         val out = FixtureCache.dir(t.dir, "chunkhist") { d =>
           graft.etl.Ingest.mergeChunked(spark, cumulativeHists(t), d)
         }
-        val back = graft.etl.Ingest.openChunkedSamples(spark, out)
+        val back = graft.etl.Ingest.selectChunkedSamples(spark, out, Nil, ti - lb, ti)
         val w = back.filter(col("ts_ms") <= ti && col("ts_ms") > ti - lb)
         val last = w.groupBy(col("evt")).agg(max(col("ts_ms")).as("ts_ms"))
         w.join(last, Seq("evt", "ts_ms"))

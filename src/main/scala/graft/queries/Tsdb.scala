@@ -1064,10 +1064,11 @@ object Tsdb {
     // The AT-SCALE composition in one store, through the Serve path: a
     // CHUNKED layout (decode-on-read Gorilla frames) with a persisted
     // `downsample-<res>` layer beside it, wired by discoverLayers — so the
-    // same directory serves short-range queries from chunks (ChunkFramePrune
-    // pushes mint/maxt to the frame scan; LayerRouteSpec pins both plans)
-    // and aligned long-range increase() from the 1h layer, hash-matching
-    // DuckDB's raw extrapolated walk over the identical dense series.
+    // same directory serves short-range queries from chunks (the select
+    // binds the query's reach, so only overlapping days and frames are
+    // decoded; LayerRouteSpec pins both plans) and aligned long-range
+    // increase() from the 1h layer, hash-matching DuckDB's raw
+    // extrapolated walk over the identical dense series.
     Q("s5_chunked_layers", {
       val (start, step, win) = (T0 + 6 * DAY, 6 * 3600000L, DAY)
       val end = T0 + 12 * DAY
@@ -1083,9 +1084,11 @@ object Tsdb {
               graft.etl.Ingest.openChunkedSamples(spark, d).drop("date"), 3600000L),
             s"$d/downsample-3600000")
         }
-        val chunked = graft.etl.Ingest.openChunkedSamples(spark, out)
+        val ast = Parser.parse("increase(purchase[1d])")
+        val (lo, hi) = Compiler.timeBounds(ast, start, end, LB)
+        val chunked = graft.etl.Ingest.selectChunkedSamples(spark, out, Nil, lo, hi)
         val layers = graft.etl.Downsample.discoverLayers(spark, out)
-        Compiler.compileCached(Parser.parse("increase(purchase[1d])"),
+        Compiler.compileCached(ast,
             Compiler.Ctx(chunked, start, end, step, LB, layers = layers))
           .select(col("uid"), col("step_ms"), col("value"))
           .orderBy(col("uid"), col("step_ms"))

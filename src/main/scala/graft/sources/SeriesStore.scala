@@ -50,8 +50,9 @@ trait SeriesStore extends AutoCloseable {
 
 object SeriesStore {
   /** Open `dir` in whichever layout it holds, first match wins:
-    *  1. `<dir>/chunks` — the chunk-file layout (decode-on-read;
-    *     ChunkFramePrune keeps per-query time bounds pruning frames);
+    *  1. `<dir>/chunks` — the chunk-file layout, decoded on read; each
+    *     query selects only the day partitions and frames its bounds
+    *     overlap, before any frame is decoded;
     *  2. `<dir>/samples` — the converted flat layout;
     *  3. a thanos-parquet-gateway bucket (`<hash>/<date>/<shard>.labels
     *     .parquet`), served through the byte-level interop reader;
@@ -60,7 +61,8 @@ object SeriesStore {
     *  5. otherwise the raw events fixture. */
   def open(spark: SparkSession, dir: String): SeriesStore =
     if (isDir(s"$dir/chunks"))
-      new FrameStore(graft.etl.Ingest.openChunkedSamples(spark, dir))
+      new FrameStore(graft.etl.Ingest.openChunkedSamples(spark, dir),
+        Some((lo: Long, hi: Long) => graft.etl.Ingest.selectChunkedSamples(spark, dir, Nil, lo, hi)))
     else if (isDir(s"$dir/samples"))
       new FrameStore(graft.etl.Ingest.openSamples(spark, dir))
     else if (isReferenceBucket(dir)) reference(spark, dir)
@@ -117,10 +119,11 @@ object SeriesStore {
 }
 
 /** Any samples frame as a [[SeriesStore]]. With `byRange`, each select
-  * binds `byRange(lo, hi)` instead of the fixed frame — a day-listed store
-  * (the reference-bucket reader) then opens only the days a query can
-  * touch. `samples` stays the schema/metadata authority. Matcher sets are
-  * not pushed: the frame is filtered by the caller's exact predicates. */
+  * binds `byRange(lo, hi)` instead of the fixed frame — a day-partitioned
+  * store (the reference-bucket reader, the chunk layout) then reads only
+  * the days, and for chunks only the frames, a query can touch. `samples`
+  * stays the schema/metadata authority. Matcher sets are not pushed: the
+  * frame is filtered by the caller's exact predicates. */
 final class FrameStore(samples: DataFrame,
                        byRange: Option[(Long, Long) => DataFrame] = None)
     extends SeriesStore {

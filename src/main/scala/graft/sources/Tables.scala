@@ -39,22 +39,19 @@ object Tables {
     * per table. Only METADATA (file list + schema) is memoized: every
     * action still scans the parquet files — no rows, results or
     * intermediates are cached, so bench/oracle runs compute from the
-    * inputs exactly as before (the data dirs are read-only fixtures). */
+    * inputs exactly as before. Nothing evicts these entries, nor the
+    * derived caches keyed by the frames they hand out (`Tsdb.samplesCache`,
+    * `Histograms.cumHistCache`, `Compiler.planCache`). That is correct only
+    * because a `Tables` dir is an immutable fixture: generated, if at all,
+    * before its first read, and never rewritten in-process. Written layouts
+    * are opened through their own readers ([[graft.etl.Ingest]]), not
+    * through `Tables`. */
   private val relCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def rel(spark: SparkSession, path: String): DataFrame =
     relCache.computeIfAbsent((spark, path), _ => spark.read.parquet(path))
   private[sources] val eventsCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** The caches hold resolved file lists: correct ONLY because the served
-    * dirs are immutable fixtures (r21 ADVICE). A writer that rewrites a
-    * table dir in-process must call this or it would serve a stale listing.
-    * Also the session-teardown hook for long multi-session JVMs (tests). */
-  def invalidate(path: String): Unit = {
-    relCache.keySet.removeIf(_._2 == path)
-    eventsCache.keySet.removeIf(_._2 == path)
-  }
 
   /** Normalize an events-shaped `ts` column to TimestampType (LTZ) whatever
     * physical form the driver wrote this round — the single copy both the

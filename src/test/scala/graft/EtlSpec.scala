@@ -214,7 +214,7 @@ class EtlSpec extends SparkSpec {
     }
   }
 
-  test("ChunkFramePrune: plain ts filter over the decoded view prunes frames at the scan") {
+  test("chunk store select: query bounds prune frames at the scan") {
     import graft.promql.{Eval, MatchEq}
     val t = Tables(spark, sf())
     val out = Files.createTempDirectory("graft-chunkr").toString
@@ -222,29 +222,24 @@ class EtlSpec extends SparkSpec {
     val T0 = 1704067200000L; val DAY = 86400000L
     val (lo, hi) = (T0 + 7 * DAY, T0 + 14 * DAY - 1)
 
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.ChunkFramePrune
-    try {
-      // no hand pruning: the ORDINARY engine select over the decoded view —
-      // the rule must carry ts bounds through the explode to the frame scan
-      val auto = Eval.select(Ingest.openChunkedSamples(spark, out),
-        Seq(MatchEq("__name__", "purchase")), lo, hi)
-      val flat = graft.model.TimeSeriesModel.samples(t.events)
-        .filter(col("__name__") === "purchase" && col("ts_ms").between(lo, hi))
-      assert(auto.count() == flat.count() && auto.count() > 0)
+    // the ORDINARY engine select over the store's bounded frame: the store
+    // carries the query bounds to the frame scan, below the decode
+    val store = graft.sources.SeriesStore.open(spark, out)
+    val auto = Eval.select(store.select(lo, hi), Seq(MatchEq("__name__", "purchase")), lo, hi)
+    val flat = graft.model.TimeSeriesModel.samples(t.events)
+      .filter(col("__name__") === "purchase" && col("ts_ms").between(lo, hi))
+    assert(auto.count() == flat.count() && auto.count() > 0)
 
-      val scans = auto.queryExecution.executedPlan.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
-      assert(scans.size == 1)
-      val pushed = scans.head.metadata("PushedFilters")
-      for (f <- Seq(s"GreaterThanOrEqual(maxt,$lo)", s"LessThanOrEqual(mint,$hi)",
-                    "EqualTo(__name__,purchase)"))
-        assert(pushed.contains(f), s"missing pushed filter $f in:\n$pushed")
-    } finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == graft.plans.ChunkFramePrune)
+    val scans = auto.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+    assert(scans.size == 1)
+    val pushed = scans.head.metadata("PushedFilters")
+    for (f <- Seq(s"GreaterThanOrEqual(maxt,$lo)", s"LessThanOrEqual(mint,$hi)",
+                  "EqualTo(__name__,purchase)"))
+      assert(pushed.contains(f), s"missing pushed filter $f in:\n$pushed")
   }
 
-  test("ChunkFramePrune: mixed float/histogram decode shape still prunes frames") {
+  test("chunk store select: mixed float/histogram decode shape still prunes frames") {
     import spark.implicits._
     val T0 = 1704067200000L
     val histType = graft.functions.HistChunk.HistType
@@ -264,21 +259,16 @@ class EtlSpec extends SparkSpec {
     Ingest.mergeChunked(spark, samples, out)
     val (lo, hi) = (T0 + 10 * 3600000L, T0 + 14 * 3600000L)
 
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.ChunkFramePrune
-    try {
-      val auto = Ingest.openChunkedSamples(spark, out)
-        .filter(col("ts_ms").between(lo, hi))
-      val want = samples.filter(col("ts_ms").between(lo, hi)).count()
-      assert(auto.count() == want && want > 0)
-      val scans = auto.queryExecution.executedPlan.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
-      assert(scans.size == 1)
-      val pushed = scans.head.metadata("PushedFilters")
-      for (f <- Seq(s"GreaterThanOrEqual(maxt,$lo)", s"LessThanOrEqual(mint,$hi)"))
-        assert(pushed.contains(f), s"missing pushed filter $f in:\n$pushed")
-    } finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == graft.plans.ChunkFramePrune)
+    val auto = Ingest.selectChunkedSamples(spark, out, Nil, lo, hi)
+    assert(auto.columns.toSeq == Ingest.openChunkedSamples(spark, out).columns.toSeq)
+    val want = samples.filter(col("ts_ms").between(lo, hi)).count()
+    assert(auto.count() == want && want > 0)
+    val scans = auto.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+    assert(scans.size == 1)
+    val pushed = scans.head.metadata("PushedFilters")
+    for (f <- Seq(s"GreaterThanOrEqual(maxt,$lo)", s"LessThanOrEqual(mint,$hi)"))
+      assert(pushed.contains(f), s"missing pushed filter $f in:\n$pushed")
   }
 
   test("PromQL engine over the converted layout matches raw source, with partition pruning") {

@@ -425,31 +425,29 @@ class LayerRouteSpec extends SparkSpec {
     val dirs = scannedDirs(routed)
     assert(dirs.exists(_.contains("downsample-")), s"layer missing from $dirs")
     assert(!dirs.exists(_.contains(s"$out/chunks")), s"chunk scan leaked into $dirs")
-    // non-routable window on the same store: the chunk scan serves it with
-    // the engine's time bound pushed to the frame scan (ChunkFramePrune)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.ChunkFramePrune
-    try {
-      val nr = Compiler.compile(Parser.parse("""sum_over_time({__name__="gau"}[97m])"""),
-        Compiler.Ctx(chunked, start, end, step, layers = layers))
-      assert(nr.count() > 0)
-      import org.apache.spark.sql.execution.SparkPlan
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      def scansOf(p: SparkPlan): Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
-        p match {
-          case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
-          case q: QueryStageExec        => scansOf(q.plan)
-          case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
-          case _ => (p.children ++ p.subqueries).flatMap(scansOf)
-        }
-      val scans = scansOf(nr.queryExecution.executedPlan)
-      assert(scans.nonEmpty)
-      val pushed = scans.map(_.metadata("PushedFilters")).mkString("\n")
-      assert(pushed.contains("GreaterThanOrEqual(maxt,") &&
-        pushed.contains("LessThanOrEqual(mint,"),
-        s"frame time bounds not pushed:\n$pushed")
-    } finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == graft.plans.ChunkFramePrune)
+    // non-routable window on the same store: the store's bounded select
+    // serves it, with the query's reach pushed to the frame scan
+    val nrAst = Parser.parse("""sum_over_time({__name__="gau"}[97m])""")
+    val (lo, hi) = Compiler.timeBounds(nrAst, start, end)
+    val nr = Compiler.compile(nrAst, Compiler.Ctx(
+      graft.sources.SeriesStore.open(spark, out).select(lo, hi), start, end, step,
+      layers = layers))
+    assert(nr.count() > 0)
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def scansOf(p: SparkPlan): Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
+      p match {
+        case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
+        case q: QueryStageExec        => scansOf(q.plan)
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
+        case _ => (p.children ++ p.subqueries).flatMap(scansOf)
+      }
+    val scans = scansOf(nr.queryExecution.executedPlan)
+    assert(scans.nonEmpty)
+    val pushed = scans.map(_.metadata("PushedFilters")).mkString("\n")
+    assert(pushed.contains("GreaterThanOrEqual(maxt,") &&
+      pushed.contains("LessThanOrEqual(mint,"),
+      s"frame time bounds not pushed:\n$pushed")
   }
 
   test("fuzz: random UNALIGNED grids × functions stay bit-identical (route or fall back)") {

@@ -89,6 +89,24 @@ class SeriesStoreSpec extends SparkSpec {
     assert(fs.nonEmpty && fs.forall(_.contains(s"$both/chunks/")))
   }
 
+  test("a chunk-layout store prunes each select by its bounds before decoding") {
+    val (name, dir, _) = layouts.head
+    assert(name == "chunked")
+    val store = SeriesStore.open(spark, dir)
+    val (lo, hi) = (jan1 + D, jan1 + 2 * D - 1)
+    val sel = store.select(lo, hi)
+    val scans = sel.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+    assert(scans.size == 1)
+    val pushed = scans.head.metadata("PushedFilters")
+    for (f <- Seq(s"GreaterThanOrEqual(maxt,$lo)", s"LessThanOrEqual(mint,$hi)"))
+      assert(pushed.contains(f), s"missing pushed filter $f in:\n$pushed")
+    assert(scans.head.metadata("PartitionFilters").contains("date"))
+    val want = samples.filter($"ts_ms".between(lo, hi)).count()
+    assert(want > 0 && want < samples.count())
+    assert(sel.count() == want)
+  }
+
   test("every layout answers select and introspection alike") {
     val stores = layouts.map { case (name, dir, _) => name -> SeriesStore.open(spark, dir) }
     try {
